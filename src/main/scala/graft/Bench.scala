@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 object Bench {
 
   /** Run one query under the noop sink; wall seconds + the error when
@@ -20,6 +20,9 @@ object Bench {
   def jsonEscape(s: String): String = s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   }
@@ -55,87 +58,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // guard, not a fix: a runaway iterative lineage once built 2 GiB
-      // plan-description strings per execution (see Graph loop notes);
-      // cap the stringifier so any future regression costs ~1 MB of
-      // truncated text instead of minutes of CPU per query
-      .config("spark.sql.maxPlanStringLength", "1000000")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("GRAFT_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // AQE re-partitioning of CACHED plan materialization was A/B'd
-      // battery-style in r19 (25-query cross-family subset, min-of-2):
-      // net 1.00× — broadcast-iterative loops over cached edge frames
-      // won big (q126 0.62×, q194 0.70×) but compute-dense consumers
-      // of coalesced caches serialized (q279 1.88×, q320 1.49×, q49
-      // 1.33×). Kept at the Spark default (false); the winners get
-      // the same effect surgically (size-derived partition compaction
-      // at the operator). Env knob retained for re-measurement.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("GRAFT_CACHE_AQE", "false"))
-      // NOTE (r18): coalescePartitions.parallelismFirst=false was
-      // TRIED here (respect the advisory size; fewer tiny tasks) and
-      // REVERTED on measurement: the battery's many byte-light but
-      // compute-DENSE post-shuffle stages (n-gram dedup, self-BLEU,
-      // assoc-rules...) coalesced to ~1 task and serialized — the
-      // same failure mode spreadForCompute fixes for the DP metrics.
-      // parallelism-first is the right default for this workload mix.
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // neutral warmup: JIT + codegen + shuffle machinery, no query data
-    spark.range(2000000).selectExpr("sum(id * 2)", "count(distinct id % 7)").collect()
-    // parquet reader/writer machinery too (a 3-row scratch file, NOT
-    // query data — the first measured query should not absorb library
-    // class-loading and footer-reader init)
-    val warm = java.nio.file.Files.createTempDirectory("bench_warm").toString
-    spark.range(3).toDF("id").write.mode("overwrite").parquet(warm)
-    spark.read.parquet(warm).agg(org.apache.spark.sql.functions.sum("id")).collect()
-    // iterative-plan warmup (still neutral: synthetic ids, no query
-    // data). The heavy battery tier (pagerank, label-prop, distill)
-    // chains 10-20 join+agg iterations into one deep plan; on a cold
-    // JVM the Catalyst analyze→optimize→codegen machinery for that
-    // plan runs INTERPRETED and the first such query absorbs a 5-25×
-    // multiplier (r12 driver single-shot: q126 39 s vs min-of-2
-    // 4.9 s; measured cold-JVM single-shot on this box: 134 s). The
-    // trivial warmups above compile a couple of stages — nowhere near
-    // enough invocations for C2 to compile the planner itself. Run
-    // the REAL iteration loop on a 160-edge synthetic graph (plan
-    // machinery cost is identical; data cost is nil), plus one
-    // window+join+explode round, so the paths every heavy query hits
-    // are JIT-compiled before anything is timed.
-    locally {
-      import org.apache.spark.sql.functions._
-      val e = spark.range(320)
-        .selectExpr("id % 40 AS src", "(id * 7 + 3) % 40 AS dst")
-      // repeated rounds: one pass compiles only part of the planner
-      // tier (C2 needs repeated invocations); measured cold q126 at
-      // sf0.1 on this box: no iterative warmup 134 s, one round 55 s,
-      // three rounds 26.6 s, six rounds — see NOTES_r16
-      for (_ <- 1 to 6) {
-        measure(graft.ext.Graph.pageRank(e.toDF(), iterations = 10))
-        graft.engine.TrackedCache.release()
-      }
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("g").orderBy("id")
-      spark.range(5000).selectExpr("id", "id % 50 AS g")
-        .select(col("id"), col("g"), row_number().over(w).as("rn"),
-          sum(col("id")).over(w.rowsBetween(Long.MinValue, 0)).as("cs"))
-        .where(col("rn") <= 3)
-        .join(spark.range(50).selectExpr("id AS g", "id * 2 AS gg"), "g")
-        .select(col("g"), explode(sequence(lit(1L), lit(3L))).as("k"),
-          col("cs") * col("gg"))
-        .collect()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
+    val spark = Session.build()
+    Session.warmup(spark)
     // dev-loop subset filter: SPARK_GRAFT_ONLY=q57_dedup_apply,q58*
     // runs just those (exact names; trailing * = prefix). Unset = the
     // full battery. A filtered run stamps "subset" into the JSON.
@@ -166,50 +90,14 @@ object Bench {
     // min-of-N is the standard attribution-stable estimator — use
     // reps=2 when comparing operator timings round over round.
     val reps = sys.env.get("SPARK_GRAFT_REPS").map(_.toInt).getOrElse(1).max(1)
-    // SPARK_GRAFT_SWEEP=deep adds the two session-state drains the
-    // standard sweep misses (the r13 full-battery-drift suspects):
-    // memory-sink temp views from the streaming entries (their
-    // MemorySink holds every emitted batch's rows for the rest of the
-    // JVM) and loaded state-store providers + the state maintenance
-    // task (StateStore.stop unloads both; the next streaming query
-    // reloads from its checkpoint).
-    val deepSweep = sys.env.get("SPARK_GRAFT_SWEEP").contains("deep")
-    def sweep(): Unit = {
-      graft.engine.TrackedCache.release() // drain the ledger too
-      spark.catalog.clearCache()
-      // BLOCKING unpersist: an async free (executor block drops,
-      // ContextCleaner broadcast removal) otherwise runs INTO the next
-      // query's timed region — r10 measured a contiguous burst of
-      // 1.5-10× slot inflation with exactly this signature
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      if (deepSweep) {
-        spark.catalog.listTables().collect()
-          .filter(_.isTemporary).map(_.name)
-          .foreach(spark.catalog.dropTempView)
-        org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-      }
-      System.gc()
-      Thread.sleep(150) // let the cleaner thread drain post-GC callbacks
-    }
     val results = selected.map { case (name, fn) =>
-      val runs = (1 to reps).map { r =>
+      val runs = (1 to reps).map { _ =>
         val m = measure(fn(spark, sfDir))
-        if (r < reps) sweep()
+        Session.sweep(spark)
         m
       }
       val (secs, err) = runs.minBy { case (s, e) => (e.isDefined, s) }
       err.foreach(e => System.err.println(s"[bench] $name FAILED: $e"))
-      // isolation between measured queries (OUTSIDE the timed region):
-      // queries manage their own caches, but leftover blocks a query
-      // keeps alive by design (e.g. nearDupClusters' final checkpoint,
-      // which unpersist can't release) plus accumulated broadcasts and
-      // garbage otherwise bleed GC pressure into later queries — the
-      // r3 driver run showed one query at 4× its stable local time
-      // with exactly this signature. Sweep the CacheManager AND the
-      // persistent-RDD registry (checkpoint RDDs live only in the
-      // latter), then let the JVM compact before the next measurement.
-      sweep()
       (name, secs, err)
     }
     println(renderJson(results, sfDir,

@@ -67,7 +67,7 @@ object Skew {
     * iterative plan dominating (q214: 85 s deser across 662 tasks).
     * AQE cannot fix this (cached-plan re-partitioning is off by
     * default, and flipping it globally regressed compute-dense cache
-    * consumers 1.5-1.9× — see Bench.scala note), so the compaction is
+    * consumers 1.5-1.9× — see graft.Session), so the compaction is
     * explicit and the count derives from the LEAF SCAN bytes: n =
     * clamp(ceil(scanBytes / advisoryBytes), 1, defaultParallelism).
     * Tiny inputs coalesce to one partition; at warehouse scale the
@@ -81,14 +81,12 @@ object Skew {
     */
   def compactForOverhead(df: DataFrame, keys: Seq[Column],
                          advisoryBytes: Long = 1L << 20): DataFrame = {
-    val adv = sys.env.get("GRAFT_COMPACT_TARGET").map(_.toLong)
-      .getOrElse(advisoryBytes)
     val bytes = df.queryExecution.optimizedPlan.collectLeaves()
       .map(_.stats.sizeInBytes).sum
     val maxP = df.sparkSession.sparkContext.defaultParallelism
     val n =
-      if (bytes >= BigInt(adv) * maxP) maxP
-      else math.max(1L, ((bytes + adv - 1) / adv).toLong).toInt
+      if (bytes >= BigInt(advisoryBytes) * maxP) maxP
+      else math.max(1L, ((bytes + advisoryBytes - 1) / advisoryBytes).toLong).toInt
     if (keys.isEmpty) df.repartition(n) else df.repartition(n, keys: _*)
   }
 

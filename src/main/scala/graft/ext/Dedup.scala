@@ -1054,9 +1054,6 @@ object Dedup {
     // ContextCleaner once the result is garbage, or explicitly by a
     // caller sweeping `sc.getPersistentRDDs` (the bench does).
     var liveCkptRdds: Seq[org.apache.spark.rdd.RDD[_]] = Nil
-    // dev-loop probe (GRAFT_CC_DEBUG=1): per-iteration wall time to
-    // stderr, for attributing loop cost to iterations vs upstream
-    val ccDebug = sys.env.get("GRAFT_CC_DEBUG").contains("1")
     // convergence-check BATCHING (r18 optimization round): at
     // sf-bench scale each count action costs a full job (scheduling
     // floor ≈ the whole per-round cost on small graphs — the r17
@@ -1085,7 +1082,6 @@ object Dedup {
     var anchor = labels // last materialized generation (jump lookup)
     var i = 0
     while (!converged && i < maxIter) {
-      val itT0 = if (ccDebug) System.nanoTime() else 0L
       val propagated = edges
         .join(labels.select(col("id").as("src"), col("cluster")), "src")
         .groupBy(col("dst").as("id"))
@@ -1136,8 +1132,6 @@ object Dedup {
         deferredFrees ::= labels
       }
       labels = next
-      if (ccDebug) System.err.println(
-        f"[cc] iter=$i checked=$doCheck converged=$converged ${(System.nanoTime() - itT0) / 1e9}%.3f s")
       i += 1
     }
     deferredFrees.foreach(_.unpersist())

@@ -2877,9 +2877,13 @@ object Profile {
       // r19 (guide §2.3 "narrower types"): the row-scale distinct runs
       // on the NATIVE key type; the string normalization (which keeps
       // cross-type candidate pairs comparable) is applied to the
-      // ndv-sized dictionary after. cast-to-string is injective on
-      // the key types used here and preserves NULL, so filter +
-      // distinct commute with it — result-identical, oracle-verified.
+      // ndv-sized dictionary after. cast-to-string preserves NULL and
+      // is injective on integral and string keys (the battery's pairs
+      // are all integral), so filter + distinct commute with it there —
+      // result-identical, oracle-verified. It is NOT injective
+      // on float/double: the native distinct folds 0.0 and -0.0 into
+      // one key where the old cast-first form counted "0.0" and "-0.0"
+      // as two, so ndv/containment can differ on such columns.
       val cd = child.select(col(childCol).as("_k0"))
         .where(col("_k0").isNotNull).distinct()
         .select(col("_k0").cast("string").as("k"))

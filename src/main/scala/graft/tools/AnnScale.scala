@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ext.Similarity
@@ -16,12 +15,7 @@ import graft.ext.Similarity
 object AnnScale {
   def main(args: Array[String]): Unit = {
     val nVecs = args.headOption.map(_.toInt).getOrElse(100000)
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.build()
 
     // base vector components: splitmix-ish hash of (seed, j) → [-1, 1);
     // every 20th vector copies its predecessor with a tiny deterministic

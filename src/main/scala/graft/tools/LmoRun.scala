@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.io.File
-import org.apache.spark.sql.SparkSession
 
 import graft.engine.Pipelines
 import graft.fixtures.LmoFixtures
@@ -15,12 +14,7 @@ import graft.fixtures.LmoFixtures
 object LmoRun {
   def main(args: Array[String]): Unit = {
     val outDir = new File(args.headOption.getOrElse("/tmp/lmo_out"))
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.build()
 
     val raw = java.nio.file.Files.createTempDirectory("lmo_raw").toFile
     LmoFixtures.writeRawCsvs(spark, raw)

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.io.File
-import org.apache.spark.sql.SparkSession
 
 import graft.engine.Pipelines
 import graft.fixtures.LmoFixtures
@@ -18,13 +17,7 @@ object LmoScale {
     val nNoc = args.headOption.map(_.toInt).getOrElse(500)
     val nInd = args.lift(1).map(_.toInt).getOrElse(60)
     val nRegion = args.lift(2).map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.build()
 
     val t0 = System.nanoTime()
     val in = LmoFixtures.scaledInputs(spark, nNoc, nInd, nRegion)

@@ -1,27 +1,21 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session across all suites (sbt runs tests in one
-  * forked JVM; SparkSession.builder.getOrCreate reuses it).
+  * forked JVM; the builder's getOrCreate reuses it).
   */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // guard, not a fix: a runaway iterative lineage once built 2 GiB
-      // plan-description strings per execution (see Graph loop notes);
-      // cap the stringifier so any future regression costs ~1 MB of
-      // truncated text instead of minutes of CPU per query
-      .config("spark.sql.maxPlanStringLength", "1000000")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = Session.build(slots = 8)
+    // the suite's dictionary-sized global windows are allowlisted and
+    // PlanChecks.rowScaleGlobalWindows / ScaleSpec guard the row-scale
+    // ones, so WindowExec's "No Partition Defined" warning is noise here
+    Configurator.setLevel(classOf[WindowExec].getName, Level.ERROR)
     s
   }
 }
