@@ -1,6 +1,10 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.{LongWritable, Text}
+import org.apache.hadoop.mapred.{FileSplit, JobConf, Reporter, TextInputFormat}
+import org.apache.hadoop.util.ReflectionUtils
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scan-side operators (SURVEY.md §2.1).
@@ -19,12 +23,14 @@ object Ingest {
   /** CSV read with `skip` physical lines dropped before the header.
     *
     * Spark CSV has no skip-N-lines option, so the preamble is dropped
-    * on the text layer: each file is read as lines with
-    * `zipWithIndex` (per-file, so multi-file globs skip the preamble
-    * in EVERY file), then the remaining lines are parsed by the
-    * regular CSV reader — schema inference, quoting, nullValue all
-    * intact. Reads stay distributed; only file listing touches the
-    * driver.
+    * on the text layer, per file (multi-file globs skip the preamble
+    * AND the header in EVERY file): the driver reads each file's first
+    * lines with the same line reader `hadoopFile` uses, and the read
+    * keeps the lines whose byte offset lies past that file's header.
+    * This runs no Spark job and holds for any split of the file. The
+    * remaining lines are parsed by the regular CSV reader — schema
+    * inference, quoting, nullValue all intact. Reads stay distributed;
+    * only file listing and the preambles touch the driver.
     */
   def readCsv(spark: SparkSession, path: String, skip: Int = 0,
               nullValue: String = "", header: Boolean = true): DataFrame = {
@@ -38,39 +44,63 @@ object Ingest {
     else {
       val files = resolveFiles(spark, path)
       require(files.nonEmpty, s"readCsv: no files match $path")
-      // parse PER FILE then union: each file carries its own preamble
-      // AND header, so a naive union of stripped lines would leave the
-      // 2nd..nth headers embedded as data rows
-      def stripped(f: String, nSkip: Int): Dataset[String] =
-        spark.sparkContext.textFile(f)
-          .zipWithIndex()
-          .filter(_._2 >= nSkip.toLong)
-          .map(_._1)
+      val heads = files.map(preamble(spark, _, skip, header))
+      val lines = files.zip(heads).map { case (f, (last, _)) =>
+        spark.sparkContext
+          .hadoopFile(f, classOf[TextInputFormat], classOf[LongWritable], classOf[Text])
+          .filter(_._1.get > last)
+          .map(_._2.toString)
           .toDS()
-      // infer the schema ONCE over the union of all stripped lines —
-      // per-file inference would let files whose columns infer
-      // differently (all-null → string, int vs double) silently widen
-      // or fail at unionByName, diverging from a single-read parse.
-      // Files 2..n also drop their header line so repeated header
-      // tokens can't force numeric columns to string during inference.
-      val extra = if (header) 1 else 0
-      val inferenceLines = (stripped(files.head, skip) +:
-        files.tail.map(f => stripped(f, skip + extra))).reduce(_ union _)
-      val schema = reader.csv(inferenceLines).schema
-      val fixed = spark.read
-        .option("header", header)
+      }.reduce(_ union _)
+      // infer the schema ONCE over all files' data lines, under the
+      // first file's header — per-file inference would let files whose
+      // columns infer differently (all-null → string, int vs double)
+      // silently widen or fail at a union, diverging from a
+      // single-read parse
+      val schema = reader.csv(heads.head._2.toSeq.toDS().union(lines)).schema
+      spark.read
+        .option("header", false)
         .option("nullValue", nullValue)
         .option("emptyValue", "")
         .schema(schema)
-      files.map(f => fixed.csv(stripped(f, skip))).reduce(_ unionByName _)
+        .csv(lines)
     }
+  }
+
+  /** The byte offset of the last line that `path` spends on its
+    * preamble (`skip` lines) and, when `header`, its header (the first
+    * non-blank line after them), with that header line; -1 when no line
+    * is dropped. Read on the driver with the reader `hadoopFile` uses,
+    * so the offset compares with its keys.
+    */
+  private def preamble(spark: SparkSession, path: String, skip: Int,
+                       header: Boolean): (Long, Option[String]) = {
+    val conf = new JobConf(spark.sparkContext.hadoopConfiguration)
+    val p = new Path(path)
+    val split = new FileSplit(p, 0, p.getFileSystem(conf).getFileStatus(p).getLen,
+      Array.empty[String])
+    val lines = ReflectionUtils.newInstance(classOf[TextInputFormat], conf)
+      .getRecordReader(split, conf, Reporter.NULL)
+    val (key, line) = (lines.createKey(), lines.createValue())
+    try {
+      var last = -1L
+      var n = 0
+      while (n < skip && lines.next(key, line)) { last = key.get; n += 1 }
+      var head: Option[String] = None
+      // blank as the CSV reader sees it: nothing but spaces
+      while (header && n == skip && head.isEmpty && lines.next(key, line)) {
+        last = key.get
+        if (line.toString.exists(_ != ' ')) head = Some(line.toString)
+      }
+      (last, head)
+    } finally lines.close()
   }
 
   /** Glob discovery on the driver (the reference discovers its Excel
     * input by filename pattern, `:93-95`).
     */
   def resolveFiles(spark: SparkSession, pathOrGlob: String): Seq[String] = {
-    val hadoopPath = new org.apache.hadoop.fs.Path(pathOrGlob)
+    val hadoopPath = new Path(pathOrGlob)
     val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val matched = Option(fs.globStatus(hadoopPath)).map(_.toSeq).getOrElse(Nil)
     val expanded = matched.flatMap { st =>

@@ -1,6 +1,8 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sinks.{Archive, Xlsx}
@@ -13,9 +15,20 @@ import graft.sinks.{Archive, Xlsx}
   * filter (pushed to the scan by Catalyst) → ONE conditional-agg
   * shuffle for the horizon stats + ONE pivot shuffle for the wide
   * years, joined on the group keys (equal partitioning, exchange
-  * reused) → driver-side collect ONLY at the report-sized workbook
-  * sink. The reference's nest→map→unnest round trips
-  * (01_source_me.R:104-110 etc.) do not exist here — see Horizon.
+  * reused) → driver-side collect ONLY of report-sized tables, for the
+  * workbook sink and the region split below. The reference's
+  * nest→map→unnest round trips (01_source_me.R:104-110 etc.) do not
+  * exist here — see Horizon.
+  *
+  * Each table is computed once, pulled once and released; nothing is
+  * left cached. A table with region sheets (artifacts 2, 7, 8) is
+  * collected once and split by region on the driver into local
+  * relations, which the sink then collects without a Spark job. HOO
+  * (artifact 4) pulls its regional job openings once and builds every
+  * region's list from ONE plan (the HOO columns stacked into
+  * (NOC, area) pairs, left-joined to the openings), split the same way.
+  * Only `buildAll`'s two cached fact inputs are persisted, and it
+  * releases them in `finally`.
   *
   * Deliberate divergences from the reference, per SURVEY.md §7.4:
   *  - HOO sheets are joined to regions BY NORMALIZED NAME with an
@@ -90,16 +103,35 @@ object Pipelines {
     out.orderBy(keyNames.map(col): _*)
   }
 
+  /** `table` computed and pulled to the driver once. Its local frames
+    * (all rows, or one region's rows, each in table order) are local
+    * relations: plans over them, and the sink's collect, run no Spark
+    * job, and nothing stays cached.
+    */
+  private final class Pulled(table: DataFrame) {
+    private val rows = table.collect()
+    private val key = table.schema.fieldIndex("Geographic Area")
+    private def regionOf(r: Row): Option[String] =
+      if (r.isNullAt(key)) None else Some(r.get(key).toString)
+    private def local(rs: Array[Row]): DataFrame =
+      table.sparkSession.createDataFrame(rs.toSeq.asJava, table.schema)
+
+    /** Non-null regions, sorted as `Reshape.splitByKey` sorts its keys. */
+    val regions: Seq[String] = rows.flatMap(regionOf).distinct.sorted.toSeq
+    def all: DataFrame = local(rows)
+    def region(name: String): DataFrame = local(rows.filter(regionOf(_).contains(name)))
+  }
+
   /** "data" sheet + one sheet per region (split(), 01_source_me.R:140-145),
-    * each region sheet dropping `dropCols`.
+    * each region sheet dropping `dropCols`. The region sheets are split
+    * from the one pulled table on the driver (`Reshape.splitByKey`'s
+    * keys and order, without a filter plan per region).
     */
   private def withRegionSheets(table: DataFrame, dropCols: Seq[String],
                                pct: Boolean): Seq[Xlsx.Sheet] = {
-    val cached = table.cache()
-    Xlsx.Sheet("data", cached, pct) +:
-      Reshape.splitByKey(cached, "Geographic Area").map { case (region, df) =>
-        Xlsx.Sheet(region, df.drop(dropCols: _*), pct)
-      }
+    val t = new Pulled(table)
+    Xlsx.Sheet("data", t.all, pct) +:
+      t.regions.map(region => Xlsx.Sheet(region, t.region(region).drop(dropCols: _*), pct))
   }
 
   // ——— artifact 1: Employment by Industry and Occupation for BC (:100-118) ———
@@ -133,13 +165,12 @@ object Pipelines {
     val sheetNames = hooCols.map(c =>
       c.replaceAll("Occ Group: ", "").replaceAll(" \\d{4}E$", ""))          // :172-173
     val joCol = joColName(fyod)
-    val regionalJo = longForm(in.jobOpenings)                               // :182-187
+    val area = "Geographic Area"
+    val regionalJo = new Pulled(longForm(in.jobOpenings)                    // :182-187
       .filter(col("industry") === "All industries" && col("variable") === "Job Openings")
-      .groupBy(col("noc").as("NOC"), col("geographic_area").as("Geographic Area"))
-      .agg(sum(col("value")).as(joCol))
-      .cache() // reused by every region branch (the reference re-filters per region)
-    val regions = regionalJo.select("Geographic Area").distinct()
-      .collect().map(_.getString(0)).sorted.toSeq
+      .groupBy(col("noc").as("NOC"), col("geographic_area").as(area))
+      .agg(sum(col("value")).as(joCol)))
+    val regions = regionalJo.regions
     // Sheet names keep the "HOO " prefix ("HOO British Columbia",
     // :172-173); the join region is the name minus that prefix.
     // Divergence #1: assert the name bijection instead of trusting
@@ -147,20 +178,23 @@ object Pipelines {
     require(sheetNames.map(_.stripPrefix("HOO ")).sorted == regions,
       s"HOO columns ↔ region roster mismatch: ${sheetNames.sorted} vs $regions")
     val income = "2021 Census Median Employment Income (Employed)"
-    val regionSheets = sheetNames.sorted.map { sheetName =>
-      val region = sheetName.stripPrefix("HOO ")
-      val hooCol = hooCols(sheetNames.indexOf(sheetName))
-      val kept = occChar                                                    // keep_only_hoo, :73-77
-        .filter(!col(hooCol).rlike("Non"))
-        .select(col("NOC"), col("Description"), col(income))
-        .withColumn("TEER", substring(col("NOC"), 3, 1))                    // :76
-        .select("NOC", "Description", "TEER", income)
-      val joined = Joins.naturalLeft(kept,                                  // add_jo, :78-84
-        regionalJo.filter(col("Geographic Area") === region))
-        .drop("Geographic Area")
-      Xlsx.Sheet(sheetName,
-        Reshape.relocateAfter(joined, Seq(joCol), "Description").orderBy("NOC"))
+    // every region's HOO list in one plan: each HOO column becomes an
+    // (area, flag) pair per occupation, non-HOO pairs drop out
+    // (keep_only_hoo, :73-77), and the job openings join on (NOC, area)
+    // (add_jo, :78-84)
+    val flags = hooCols.zip(sheetNames).map { case (c, s) =>
+      struct(lit(s.stripPrefix("HOO ")).as(area), col(c).cast("string").as("flag"))
     }
+    val hoo = new Pulled(occChar
+      .select(col("NOC"), col("Description"), col(income), explode(array(flags: _*)).as("hoo"))
+      .filter(!col("hoo.flag").rlike("Non"))
+      .select(col("NOC"), col("Description"), col(income), col("hoo").getField(area).as(area))
+      .join(regionalJo.all, Seq("NOC", area), "left")
+      .select(col(area), col("NOC"), col("Description"), col(joCol),
+        substring(col("NOC"), 3, 1).as("TEER"), col(income))                // :76
+      .orderBy("NOC"))
+    val regionSheets = sheetNames.sorted.map(sheetName =>
+      Xlsx.Sheet(sheetName, hoo.region(sheetName.stripPrefix("HOO ")).drop(area)))
     Artifact("High Opportunity Occupations BC and Regions.xlsx",
       Xlsx.Sheet("Data Dictionary", dataDictionary(occChar.sparkSession, fyod)) +: regionSheets)
   }

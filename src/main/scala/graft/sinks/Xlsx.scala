@@ -1,8 +1,11 @@
 package graft.sinks
 
-import java.io.{File, FileOutputStream}
+import java.io.{BufferedOutputStream, File, OutputStream}
+import java.nio.file.{Files, StandardCopyOption, StandardOpenOption}
+import java.util.UUID
 import java.util.zip.{ZipEntry, ZipOutputStream}
-import org.apache.spark.sql.DataFrame
+import scala.util.Using
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** Minimal dependency-free XLSX writer (SURVEY.md §2.9 K1-K3, K6).
   *
@@ -16,10 +19,18 @@ import org.apache.spark.sql.DataFrame
   * 1..n+1, /root/reference/01_source_me.R:23,29-49).
   *
   * This is a DRIVER-side sink by design: the reference's workbook
-  * artifacts are report-sized (≤ tens of thousands of rows), so
-  * `collect()` is the correct execution boundary — a distributed
-  * DataSourceV2 writer would serialize through one ZIP stream anyway.
-  * Data-plane outputs go to Parquet/CSV sinks instead.
+  * artifacts are report-sized, so `collect()` is the correct execution
+  * boundary — a distributed DataSourceV2 writer would serialize
+  * through one ZIP stream anyway. Each sheet is pulled with ONE
+  * `collect()` (one job for a computed plan, none for a local
+  * relation), and Excel's sheet limits (`MaxRows` rows, header
+  * included, and `MaxCols` columns) are checked before any byte of
+  * the sheet is written, so a sheet held in driver memory is never
+  * larger than Excel could open. The workbook is written to a temp
+  * file in the target directory and moved into place atomically: a
+  * failed or rejected sheet leaves neither a partial workbook at the
+  * final path nor a temp file. Data-plane outputs go to Parquet/CSV
+  * sinks instead.
   */
 object Xlsx {
 
@@ -27,6 +38,10 @@ object Xlsx {
     * are reproducible run-to-run (2020-01-01T00:00 UTC).
     */
   val FixedZipTime: Long = 1577836800000L
+
+  /** Excel's worksheet limits: rows (header included) and columns. */
+  val MaxRows: Long = 1048576L
+  val MaxCols: Int = 16384
 
   /** One worksheet: when `pctLast3`, the last three columns (all rows
     * incl. header, mirroring the reference's rows+1 quirk) get the
@@ -41,8 +56,26 @@ object Xlsx {
     val sanitized = sheets.map(s => sanitizeName(s.name))
     require(sanitized.distinct.size == sanitized.size,
       s"duplicate sheet names (post-sanitization): ${sanitized.diff(sanitized.distinct).distinct.mkString(", ")}")
-    Option(file.getParentFile).foreach(_.mkdirs())
-    val zip = new ZipOutputStream(new FileOutputStream(file))
+    atomically(file)(out => Using.resource(new ZipOutputStream(out))(writeParts(sheets, _)))
+  }
+
+  /** Writes `file` through `body` into a temp file next to it, then
+    * moves that into place atomically. The stream is closed and the
+    * temp file is gone on every path, so a failure leaves the final
+    * path as it was.
+    */
+  private[sinks] def atomically(file: File)(body: OutputStream => Unit): Unit = {
+    val target = file.getAbsoluteFile.toPath
+    val dir = Files.createDirectories(target.getParent)
+    val tmp = dir.resolve(s".${target.getFileName}.${UUID.randomUUID()}.tmp")
+    try {
+      Using.resource(new BufferedOutputStream(
+        Files.newOutputStream(tmp, StandardOpenOption.CREATE_NEW)))(body)
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp)
+  }
+
+  private def writeParts(sheets: Seq[Sheet], zip: ZipOutputStream): Unit = {
     val zipWriter = new java.io.OutputStreamWriter(zip, "UTF-8")
     def streamPart(name: String)(body: java.io.Writer => Unit): Unit = {
       val e = new ZipEntry(name)
@@ -101,16 +134,21 @@ object Xlsx {
         """<xf numFmtId="164" fontId="0" fillId="0" borderId="0" applyNumberFormat="1"/></cellXfs>""" +
         "</styleSheet>")
     sheets.zipWithIndex.foreach { case (sheet, i) =>
-      var dataRows = 0L
+      val nCols = sheet.df.columns.length
+      require(nCols <= MaxCols,
+        s"sheet '${sheet.name}' has $nCols columns; Excel allows at most $MaxCols")
+      val rows = sheet.df.collect()
+      require(rows.length + 1L <= MaxRows,
+        s"sheet '${sheet.name}' has ${rows.length + 1L} rows (header included); " +
+          s"Excel allows at most $MaxRows")
       streamPart(s"xl/worksheets/sheet${i + 1}.xml") { w =>
-        dataRows = writeSheetXml(sheet, w)
+        writeSheetXml(sheet, rows, w)
         if (sheet.asTable)
           w.write("""<tableParts count="1"><tablePart r:id="rId1"/></tableParts>""")
         w.write("</worksheet>")
       }
       if (sheet.asTable) {
-        val nCols = sheet.df.columns.length
-        val ref = s"A1:${colLetter(nCols - 1)}${dataRows + 1}"
+        val ref = s"A1:${colLetter(nCols - 1)}${rows.length + 1}"
         part(s"xl/worksheets/_rels/sheet${i + 1}.xml.rels",
           """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
             """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">""" +
@@ -126,16 +164,12 @@ object Xlsx {
             """</tableColumns><tableStyleInfo name="TableStyleMedium2" showFirstColumn="0" showLastColumn="0" showRowStripes="1" showColumnStripes="0"/></table>""")
       }
     }
-    zip.close()
   }
 
-  /** Streams the worksheet XML: rows are pulled with toLocalIterator
-    * (one partition in driver memory at a time) and each cell goes
-    * straight to the zip stream — the writer's memory is O(row), so
-    * report "sheets" of hundreds of thousands of rows don't build a
-    * gigabyte String first.
+  /** The worksheet XML of one collected sheet; each cell goes straight
+    * to the zip stream, so no sheet-sized String is built.
     */
-  private def writeSheetXml(sheet: Sheet, w: java.io.Writer): Long = {
+  private def writeSheetXml(sheet: Sheet, rows: Array[Row], w: java.io.Writer): Unit = {
     val header = sheet.df.columns.toSeq
     val nCols = header.size
     val pctFrom = if (sheet.pctLast3) math.max(nCols - 3, 0) else nCols
@@ -162,17 +196,12 @@ object Xlsx {
     w.write("""<row r="1">""")
     header.zipWithIndex.foreach { case (h, c) => cell(1, c, h) }
     w.write("</row>")
-    var ri = 0
-    val it = sheet.df.toLocalIterator()
-    while (it.hasNext) {
-      val row = it.next()
+    rows.iterator.zipWithIndex.foreach { case (row, ri) =>
       w.write(s"""<row r="${ri + 2}">""")
       (0 until nCols).foreach { c => cell(ri + 2, c, if (row.isNullAt(c)) null else row.get(c)) }
       w.write("</row>")
-      ri += 1
     }
     w.write("</sheetData>") // caller appends tableParts + </worksheet>
-    ri.toLong
   }
 
   /** Excel sheet-name rules: ≤31 chars, no []:*?/\ */

@@ -5,17 +5,25 @@ import java.io.File
 import graft.engine.Pipelines
 import graft.fixtures.LmoFixtures
 
-/** The catalog build at PRODUCTION cardinality (~500 NOCs × 60
-  * industries × 10 regions — the reference's real export size, ~2.7M
-  * long jo rows), inputs generated distributedly. Proves the
-  * pipelines and the streaming XLSX sink hold beyond toy fixtures.
+/** The catalog build near PRODUCTION cardinality, inputs generated
+  * distributedly. Proves the pipelines and the XLSX sink (one collect
+  * per sheet, bounded by Excel's sheet limits) hold beyond toy
+  * fixtures.
+  *
+  * The default roster is 500 NOCs × 20 industries × 8 regions. The
+  * long employment artifact ("Employment by Ind and Occ for BC and
+  * Regions", NOC × industry × published area × year, one sheet) then
+  * has (500 + 1) × 20 × 8 × 11 + 1 = 881,761 rows, under Excel's
+  * 1,048,576. The reference's real export (~60 industries) would need
+  * 2,645,281 rows in that sheet, and `Xlsx.write` rejects it by design;
+  * spilling it over several sheets would change the artifact.
   *
   * Usage: runMain graft.tools.LmoScale [nNoc] [nInd] [nRegion]
   */
 object LmoScale {
   def main(args: Array[String]): Unit = {
     val nNoc = args.headOption.map(_.toInt).getOrElse(500)
-    val nInd = args.lift(1).map(_.toInt).getOrElse(60)
+    val nInd = args.lift(1).map(_.toInt).getOrElse(20)
     val nRegion = args.lift(2).map(_.toInt).getOrElse(8)
     val spark = graft.Session.build()
 

@@ -62,4 +62,28 @@ class IngestSpec extends SparkSpec {
     val found = Ingest.resolveFiles(spark, s"$dir/*Occupational Characteristics*")
     assert(found.size === 1 && found.head.contains("Occupational Characteristics"))
   }
+
+  test("files split into several partitions lose exactly their preamble and header") {
+    val dir = Files.createTempDirectory("split").toFile
+    def write(name: String, preamble: Seq[String], rows: Range): String = {
+      val f = new java.io.File(dir, name)
+      val w = new java.io.PrintWriter(f)
+      preamble.foreach(w.println)
+      w.println("NOC,Value")
+      rows.foreach(i => w.println(s"#$i,$i"))
+      w.close()
+      f.getAbsolutePath
+    }
+    // many data rows after a short preamble, and a preamble longer than
+    // half the file, so the header lands in the second split
+    val long = write("a_rows.csv", Seq("preamble 1", "preamble 2", ""), 0 until 400)
+    val deep = write("b_preamble.csv", Seq.fill(3)("p" * 2000), 400 until 403)
+    Seq(long, deep).foreach(f => assert(spark.sparkContext.textFile(f).getNumPartitions > 1))
+    val one = Ingest.readCsv(spark, long, skip = 3)
+    assert(one.columns.toSeq === Seq("NOC", "Value"))
+    assert(one.schema("Value").dataType === org.apache.spark.sql.types.IntegerType)
+    assert(one.count() === 400)
+    val both = Ingest.readCsv(spark, s"$dir/*.csv", skip = 3)
+    assert(both.collect().map(_.getAs[Int]("Value")).sorted.toSeq === (0 until 403))
+  }
 }

@@ -205,4 +205,16 @@ class PipelinesSpec extends SparkSpec {
     assert(lines.size === 1 + 6 * 3 * 3 * 3 * 11)
     assert(lines.head.split(",").takeRight(2).toSeq === Seq("year", "value"))
   }
+
+  test("buildAll leaves nothing persisted and only the ten artifacts in its directory") {
+    val out = java.nio.file.Files.createTempDirectory("lmo_clean").toFile
+    val sc = spark.sparkContext
+    // a plan cached by an earlier build would be reused, not cached anew
+    spark.catalog.clearCache()
+    val before = sc.getPersistentRDDs.keySet
+    val written = Pipelines.buildAll(in, fyod, out)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      s"left persisted: ${(sc.getPersistentRDDs.keySet -- before).map(sc.getPersistentRDDs)}")
+    assert(out.list().toSeq.sorted === written.sorted)
+  }
 }

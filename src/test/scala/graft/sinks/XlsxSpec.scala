@@ -2,7 +2,11 @@ package graft.sinks
 
 import graft.SparkSpec
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.zip.ZipFile
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import scala.xml.XML
 
 class XlsxSpec extends SparkSpec {
@@ -117,5 +121,80 @@ class XlsxSpec extends SparkSpec {
     assert(Xlsx.colLetter(25) === "Z")
     assert(Xlsx.colLetter(26) === "AA")
     assert(Xlsx.colLetter(27 + 26) === "BB")
+  }
+
+  /** Spark jobs started while `body` runs. The listener bus delivers
+    * events in order, so a marker job before and after `body` bounds
+    * exactly its jobs once the second marker has been seen.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        seen.add(Option(j.properties).map(_.getProperty("spark.job.description", "")).getOrElse(""))
+    }
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("xlsx-spec-begin")
+      body
+      marker("xlsx-spec-end")
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains("xlsx-spec-end") && System.nanoTime() < deadline) Thread.sleep(10)
+      val events = seen.asScala.toSeq
+      assert(events.contains("xlsx-spec-end"), "listener never saw the end marker")
+      events.dropWhile(_ != "xlsx-spec-begin").drop(1).takeWhile(_ != "xlsx-spec-end").size
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** A frame that fails at run time, when its third row is computed. */
+  private def failing = spark.range(0, 5, 1, 1)
+    .select(when(col("id") === 2, raise_error(lit("injected sheet failure")))
+      .otherwise(col("id")).as("id"))
+
+  test("sheets backed by local relations are written without a Spark job") {
+    val a = Seq(("a", 1.0), ("b", 2.0)).toDF("k", "v")
+    val b = spark.createDataFrame(
+      Seq(org.apache.spark.sql.Row("c", 3.0)).asJava, a.schema)
+    val f = Files.createTempDirectory("local").resolve("l.xlsx").toFile
+    val jobs = jobsDuring(Xlsx.write(Seq(Xlsx.Sheet("a", a, pctLast3 = true),
+      Xlsx.Sheet("b", b.drop("v"), asTable = true)), f))
+    assert(jobs === 0)
+    val rows = XML.loadString(readPart(f, "xl/worksheets/sheet1.xml")) \\ "row"
+    assert(rows.size === 3)
+  }
+
+  test("a sheet that fails mid-write leaves no file and no temp file, and keeps the old one") {
+    val d = Files.createTempDirectory("fail")
+    val f = d.resolve("f.xlsx").toFile
+    val ok = Seq(("a", 1.0)).toDF("k", "v")
+    intercept[Exception] {
+      Xlsx.write(Seq(Xlsx.Sheet("ok", ok), Xlsx.Sheet("broken", failing)), f)
+    }
+    assert(d.toFile.list().isEmpty)
+    // a workbook already at the path survives a failed rewrite unchanged
+    Xlsx.write(Seq(Xlsx.Sheet("ok", ok)), f)
+    val before = Files.readAllBytes(f.toPath).toSeq
+    intercept[Exception] {
+      Xlsx.write(Seq(Xlsx.Sheet("ok", ok), Xlsx.Sheet("broken", failing)), f)
+    }
+    assert(d.toFile.list().toSeq === Seq("f.xlsx"))
+    assert(Files.readAllBytes(f.toPath).toSeq === before)
+  }
+
+  test("a sheet over Excel's row limit is rejected by name before any of it is written") {
+    val d = Files.createTempDirectory("limit")
+    val f = d.resolve("big.xlsx").toFile
+    // 1,048,576 data rows + the header = one row over the limit
+    val big = spark.range(0, Xlsx.MaxRows, 1, 1).toDF("i")
+    val e = intercept[IllegalArgumentException] {
+      Xlsx.write(Seq(Xlsx.Sheet("small", Seq(1).toDF("i")), Xlsx.Sheet("too long", big)), f)
+    }
+    assert(e.getMessage.contains("'too long'") && e.getMessage.contains("1048577"))
+    assert(d.toFile.list().isEmpty)
   }
 }
