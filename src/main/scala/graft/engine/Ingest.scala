@@ -113,14 +113,20 @@ object Ingest {
   def removeEmptyRows(df: DataFrame): DataFrame = df.na.drop("all")
 
   /** Drop columns where every row is null (`remove_empty("cols")`).
-    * One aggregate pass computes per-column non-null counts — a single
-    * job over the data; do it once at ingest and cache the result.
+    * One pass over the rows marks each column that holds a non-null:
+    * a single job (a global aggregate would be a shuffle stage plus a
+    * result stage under AQE).
     */
   def removeEmptyCols(df: DataFrame): DataFrame = {
-    val counts = df.select(df.columns.toIndexedSeq.map(c =>
-      count(col(c)).as(c)): _*).head()
-    val keep = df.columns.zipWithIndex
-      .collect { case (c, i) if counts.getLong(i) > 0L => c }
+    val n = df.columns.length
+    val seen = df.queryExecution.toRdd.aggregate(new Array[Boolean](n))(
+      (acc, row) => {
+        var i = 0
+        while (i < n) { if (!acc(i) && !row.isNullAt(i)) acc(i) = true; i += 1 }
+        acc
+      },
+      (a, b) => a.zip(b).map { case (x, y) => x || y })
+    val keep = df.columns.zip(seen).collect { case (c, true) => c }
     df.select(keep.toIndexedSeq.map(col): _*)
   }
 

@@ -2,7 +2,7 @@ package graft.engine
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sinks.{Archive, Xlsx}
@@ -11,24 +11,31 @@ import graft.sinks.{Archive, Xlsx}
   * lazy Spark plans, parameterized by `fyod`
   * (/root/reference/01_source_me.R:1).
   *
-  * Execution shape per artifact: scan → unpivot (narrow Expand) →
-  * filter (pushed to the scan by Catalyst) → ONE conditional-agg
+  * Execution shape: the six horizon artifacts (1, 2, 7 over
+  * employment; 3, 5, 8 over job openings) differ only in a filter on
+  * the group keys, which is constant within a group and so commutes
+  * with the group-by. Each fact input therefore runs ONE horizon plan:
+  * scan → unpivot (narrow Expand) → the OR of its artifacts' key
+  * predicates (pushed to the scan by Catalyst) → ONE conditional-agg
   * shuffle for the horizon stats + ONE pivot shuffle for the wide
   * years, joined on the group keys (equal partitioning, exchange
-  * reused) → driver-side collect ONLY of report-sized tables, for the
-  * workbook sink and the region split below. The reference's
-  * nest→map→unnest round trips (01_source_me.R:104-110 etc.) do not
-  * exist here — see Horizon.
+  * reused) → ordered on the keys → collected once into a local
+  * relation. Each artifact is its own key predicate plus the
+  * publication rename over those rows; Catalyst folds both into the
+  * local relation (`ConvertToLocalRelation`), so deriving, splitting
+  * and writing these sheets runs no Spark job, and a filtered
+  * subsequence of the key-ordered table is still key-ordered. The
+  * reference's nest→map→unnest round trips (01_source_me.R:104-110
+  * etc.) do not exist here — see Horizon.
   *
   * Each table is computed once, pulled once and released; nothing is
   * left cached. A table with region sheets (artifacts 2, 7, 8) is
-  * collected once and split by region on the driver into local
-  * relations, which the sink then collects without a Spark job. HOO
-  * (artifact 4) pulls its regional job openings once and builds every
-  * region's list from ONE plan (the HOO columns stacked into
-  * (NOC, area) pairs, left-joined to the openings), split the same way.
-  * Only `buildAll`'s two cached fact inputs are persisted, and it
-  * releases them in `finally`.
+  * split by region on the driver into local relations, which the sink
+  * then collects without a Spark job. HOO (artifact 4) pulls its
+  * regional job openings once and builds every region's list from ONE
+  * plan (the HOO columns stacked into (NOC, area) pairs, left-joined
+  * to the openings), split the same way. Only `buildAll`'s cached job
+  * openings are persisted, and it releases them in `finally`.
   *
   * Deliberate divergences from the reference, per SURVEY.md §7.4:
   *  - HOO sheets are joined to regions BY NORMALIZED NAME with an
@@ -62,6 +69,9 @@ object Pipelines {
   def longForm(src: DataFrame): DataFrame =
     Naming.cleanNames(Reshape.unpivotByPrefix(src, "2"))
 
+  private def yearCols(src: DataFrame): Seq[String] =
+    src.columns.filter(_.startsWith("2")).toSeq
+
   /** The shared horizon-report shape: filter the long form, compute
     * CAGRs or horizon sums per group, pivot years wide (first-seen =
     * chronological order), attach stats, publication-rename.
@@ -78,15 +88,28 @@ object Pipelines {
     */
   def horizonTable(src: DataFrame, fyod: Int, useCagrs: Boolean,
                    strictParity: Boolean = false)
-                  (filter: DataFrame => DataFrame): DataFrame = {
+                  (filter: DataFrame => DataFrame): DataFrame =
+    published(keyedHorizon(src, fyod, useCagrs)(filter), yearCols(src), strictParity)
+
+  /** `horizonTable` before the publication rename: the long-form group
+    * keys, the wide years and the stats, ordered on the keys.
+    */
+  private def keyedHorizon(src: DataFrame, fyod: Int, useCagrs: Boolean)
+                          (filter: DataFrame => DataFrame): DataFrame = {
     val filtered = filter(longForm(src))
     val stats =
       if (useCagrs) Horizon.cagrs(filtered, groupKeys, fyod)
       else Horizon.horizonSums(filtered, groupKeys, fyod)
-    val years = src.columns.filter(_.startsWith("2")).toSeq
-    val wide = Reshape.pivotExplicit(filtered, groupKeys, "year", years)
-    val statNames = stats.columns.filterNot(groupKeys.contains).toSeq
-    val joined = wide.join(stats, groupKeys)
+    val wide = Reshape.pivotExplicit(filtered, groupKeys, "year", yearCols(src))
+    wide.join(stats, groupKeys).orderBy(groupKeys.map(col): _*)
+  }
+
+  /** Publication names on the keys, the years as they are, the stats
+    * canonical or (`strictParity`) through `str_to_title`.
+    */
+  private def published(keyed: DataFrame, years: Seq[String],
+                        strictParity: Boolean): DataFrame = {
+    val statNames = keyed.columns.toSeq.diff(groupKeys ++ years)
     val renamed =
       if (strictParity)
         // reference contract: EVERY column through str_to_title
@@ -98,10 +121,34 @@ object Pipelines {
         // their canonical display names (divergence #3 above)
         groupKeys.map(k => col(k).as(Naming.publicationName(k))) ++
           years.map(y => col(y)) ++ statNames.map(s => col(s))
-    val out = joined.select(renamed: _*).withColumnRenamed("Noc", "NOC")
-    val keyNames = out.columns.take(groupKeys.size).toSeq
-    out.orderBy(keyNames.map(col): _*)
+    keyed.select(renamed: _*).withColumnRenamed("Noc", "NOC")
   }
+
+  /** One of the six horizon artifacts: the rows of its fact input's
+    * horizon table whose group keys satisfy `keys` (long-form names),
+    * published, made into the workbook's `sheets`.
+    */
+  private final case class HorizonArtifact(fileName: String, keys: Column,
+                                           sheets: DataFrame => Seq[Xlsx.Sheet])
+
+  /** `artifacts` over one fact input from ONE horizon plan, filtered to
+    * the rows some artifact publishes and pulled to the driver once.
+    * Each artifact's table is its key predicate plus the publication
+    * rename over that local relation: no Spark job.
+    */
+  private def horizonArtifacts(src: DataFrame, fyod: Int, useCagrs: Boolean)
+                              (artifacts: HorizonArtifact*): Seq[Artifact] = {
+    val keyed = keyedHorizon(src, fyod, useCagrs)(_.filter(artifacts.map(_.keys).reduce(_ || _)))
+    val rows = keyed.sparkSession.createDataFrame(keyed.collect().toSeq.asJava, keyed.schema)
+    artifacts.map(a => Artifact(a.fileName,
+      a.sheets(published(rows.filter(a.keys), yearCols(src), strictParity = false))))
+  }
+
+  private def employmentArtifacts(in: LmoInputs, fyod: Int)(as: HorizonArtifact*) =
+    horizonArtifacts(in.employment, fyod, useCagrs = true)(as: _*)
+
+  private def jobOpeningsArtifacts(in: LmoInputs, fyod: Int)(as: HorizonArtifact*) =
+    horizonArtifacts(in.jobOpenings, fyod, useCagrs = false)(as: _*)
 
   /** `table` computed and pulled to the driver once. Its local frames
     * (all rows, or one region's rows, each in table order) are local
@@ -134,29 +181,37 @@ object Pipelines {
       t.regions.map(region => Xlsx.Sheet(region, t.region(region).drop(dropCols: _*), pct))
   }
 
+  private val britishColumbia = col("geographic_area") === "British Columbia"
+  private val notNorthSouthEast = !col("geographic_area").isin(northSouthEast: _*)
+  private val allIndustries = col("industry") === "All industries"
+  private val joTypes = col("variable").isin("Job Openings", "Expansion Demand",
+    "Replacement Demand")
+
   // ——— artifact 1: Employment by Industry and Occupation for BC (:100-118) ———
+  private val employmentBC = HorizonArtifact(
+    "Employment by Industry and Occupation for BC.xlsx", britishColumbia,
+    t => Seq(Xlsx.Sheet("data", t, pctLast3 = true)))
+
   def employmentByIndustryOccupationBC(in: LmoInputs, fyod: Int): Artifact =
-    Artifact("Employment by Industry and Occupation for BC.xlsx", Seq(
-      Xlsx.Sheet("data",
-        horizonTable(in.employment, fyod, useCagrs = true)(
-          _.filter(col("geographic_area") === "British Columbia")),
-        pctLast3 = true)))
+    employmentArtifacts(in, fyod)(employmentBC).head
 
   // ——— artifact 2: Employment by Industry for BC and Regions (:121-147) ———
-  def employmentByIndustryRegions(in: LmoInputs, fyod: Int): Artifact = {
-    val t = horizonTable(in.employment, fyod, useCagrs = true)(
-      _.filter(col("noc") === "#T" && !col("geographic_area").isin(northSouthEast: _*)))
-    Artifact("Employment by Industry for BC and Regions.xlsx",
-      withRegionSheets(t, Seq("NOC", "Description", "Variable"), pct = true))
-  }
+  private val employmentIndustryRegions = HorizonArtifact(
+    "Employment by Industry for BC and Regions.xlsx",
+    col("noc") === "#T" && notNorthSouthEast,
+    withRegionSheets(_, Seq("NOC", "Description", "Variable"), pct = true))
+
+  def employmentByIndustryRegions(in: LmoInputs, fyod: Int): Artifact =
+    employmentArtifacts(in, fyod)(employmentIndustryRegions).head
 
   // ——— artifact 3: Job Openings by Industry and Occupation for BC (:150-167) ———
+  private val joBC = HorizonArtifact(
+    "Job Openings by Industry and Occupation for BC.xlsx",
+    britishColumbia && col("variable") === "Job Openings",
+    t => Seq(Xlsx.Sheet("Sheet 1", t)))
+
   def joByIndustryOccupationBC(in: LmoInputs, fyod: Int): Artifact =
-    Artifact("Job Openings by Industry and Occupation for BC.xlsx", Seq(
-      Xlsx.Sheet("Sheet 1",
-        horizonTable(in.jobOpenings, fyod, useCagrs = false)(
-          _.filter(col("geographic_area") === "British Columbia" &&
-            col("variable") === "Job Openings")))))
+    jobOpeningsArtifacts(in, fyod)(joBC).head
 
   // ——— artifact 4: High Opportunity Occupations BC and Regions (:170-203) ———
   def highOpportunityOccupations(in: LmoInputs, fyod: Int): Artifact = {
@@ -220,12 +275,12 @@ object Pipelines {
 
   // ——— artifact 5: JO by Type, Ind and Occ for BC and Regions (:207-229) ———
   // (the region filter is commented out in the reference — all areas kept)
+  private val joByType = HorizonArtifact(
+    "JO by Type, Ind and Occ for BC and Regions.xlsx", joTypes,
+    t => Seq(Xlsx.Sheet("Sheet 1", t)))
+
   def joByTypeIndustryOccupation(in: LmoInputs, fyod: Int): Artifact =
-    Artifact("JO by Type, Ind and Occ for BC and Regions.xlsx", Seq(
-      Xlsx.Sheet("Sheet 1",
-        horizonTable(in.jobOpenings, fyod, useCagrs = false)(
-          _.filter(col("variable").isin("Job Openings", "Expansion Demand",
-            "Replacement Demand"))))))
+    jobOpeningsArtifacts(in, fyod)(joByType).head
 
   // ——— artifact 6: Employment by Ind and Occ for BC and Regions (:232-240) ———
   // long format, ORIGINAL column names (no clean_names), Date/Value
@@ -241,33 +296,34 @@ object Pipelines {
   }
 
   // ——— artifact 7: Employment by Occupation for BC and Regions (:243-270) ———
-  def employmentByOccupationRegions(in: LmoInputs, fyod: Int): Artifact = {
-    val t = horizonTable(in.employment, fyod, useCagrs = true)(
-      _.filter(col("industry") === "All industries" &&
-        !col("geographic_area").isin(northSouthEast: _*)))
-    Artifact("Employment by Occupation for BC and Regions.xlsx",
-      withRegionSheets(t, Seq("Industry", "Variable"), pct = true))
-  }
+  private val employmentOccupationRegions = HorizonArtifact(
+    "Employment by Occupation for BC and Regions.xlsx",
+    allIndustries && notNorthSouthEast,
+    withRegionSheets(_, Seq("Industry", "Variable"), pct = true))
+
+  def employmentByOccupationRegions(in: LmoInputs, fyod: Int): Artifact =
+    employmentArtifacts(in, fyod)(employmentOccupationRegions).head
 
   // ——— artifact 8: Job Openings by Type and Occ for BC and Regions (:273-302) ———
-  def joByTypeOccupationRegions(in: LmoInputs, fyod: Int): Artifact = {
-    val t = horizonTable(in.jobOpenings, fyod, useCagrs = false)(
-      _.filter(col("industry") === "All industries" &&
-        col("variable").isin("Job Openings", "Expansion Demand", "Replacement Demand") &&
-        !col("geographic_area").isin(northSouthEast: _*)))
-    // asTable = TRUE in the reference (:300-302): each sheet carries
-    // an Excel table part over its data range
-    Artifact("Job Openings by Type and Occ for BC and Regions.xlsx",
-      withRegionSheets(t, Seq("Industry"), pct = false)
-        .map(_.copy(asTable = true)))
-  }
+  // asTable = TRUE in the reference (:300-302): each sheet carries an
+  // Excel table part over its data range
+  private val joTypeOccupationRegions = HorizonArtifact(
+    "Job Openings by Type and Occ for BC and Regions.xlsx",
+    allIndustries && joTypes && notNorthSouthEast,
+    withRegionSheets(_, Seq("Industry"), pct = false).map(_.copy(asTable = true)))
+
+  def joByTypeOccupationRegions(in: LmoInputs, fyod: Int): Artifact =
+    jobOpeningsArtifacts(in, fyod)(joTypeOccupationRegions).head
 
   // ——— artifact 9: the long CSV → zip (:305-317) ———
+  // Its keys are unique per row, so sorting inside one partition gives
+  // the global order without the range-partition sampling job of a
+  // global sort; the archive then writes that one partition.
   def joLongDump(in: LmoInputs): DataFrame = {
     val long = Reshape.unpivotByPrefix(in.jobOpenings, "2")
       .filter(!col("Geographic Area").isin(northSouthEast: _*))
     val keys = long.columns.filterNot(_ == "value").toSeq
-    long.orderBy(keys.map(col): _*)
+    long.repartition(1).sortWithinPartitions(keys.map(col): _*)
   }
 
   // ——— artifact 10: Job Openings by NOC and Skill Cluster (:325-346) ———
@@ -293,17 +349,17 @@ object Pipelines {
         .orderBy("NOC"))))
   }
 
-  /** Build every workbook artifact (1-8, 10). */
-  def allWorkbooks(in: LmoInputs, fyod: Int): Seq[Artifact] = Seq(
-    employmentByIndustryOccupationBC(in, fyod),
-    employmentByIndustryRegions(in, fyod),
-    joByIndustryOccupationBC(in, fyod),
-    highOpportunityOccupations(in, fyod),
-    joByTypeIndustryOccupation(in, fyod),
-    employmentLongBCRegions(in),
-    employmentByOccupationRegions(in, fyod),
-    joByTypeOccupationRegions(in, fyod),
-    joBySkillCluster(in, fyod))
+  /** Build every workbook artifact (1-8, 10): one horizon plan per
+    * fact input for artifacts 1, 2, 7 and 3, 5, 8.
+    */
+  def allWorkbooks(in: LmoInputs, fyod: Int): Seq[Artifact] = {
+    val Seq(a1, a2, a7) = employmentArtifacts(in, fyod)(
+      employmentBC, employmentIndustryRegions, employmentOccupationRegions)
+    val Seq(a3, a5, a8) = jobOpeningsArtifacts(in, fyod)(
+      joBC, joByType, joTypeOccupationRegions)
+    Seq(a1, a2, a3, highOpportunityOccupations(in, fyod), a5,
+      employmentLongBCRegions(in), a7, a8, joBySkillCluster(in, fyod))
+  }
 
   /** Data-plane output: every artifact's primary table lands as
     * Parquet (SCALE.md — the workbook is the human artifact; machine
@@ -328,10 +384,11 @@ object Pipelines {
     */
   def buildAll(in: LmoInputs, fyod: Int, outDir: java.io.File): Seq[String] = {
     outDir.mkdirs()
-    // the two fact inputs feed 9 of the 10 artifacts — cache once
-    // instead of re-scanning/re-parsing per artifact
-    val cached = in.copy(employment = in.employment.cache(),
-      jobOpenings = in.jobOpenings.cache())
+    // job openings feed four plans (the horizon table, HOO, artifact 10
+    // and the long dump): cache them once instead of re-scanning and
+    // re-parsing per plan. Employment feeds two (its horizon table and
+    // artifact 6), where a cache measured no gain.
+    val cached = in.copy(jobOpenings = in.jobOpenings.cache())
     try {
       val written = allWorkbooks(cached, fyod).map { a =>
         Xlsx.write(a.sheets, new java.io.File(outDir, a.fileName))
@@ -341,9 +398,6 @@ object Pipelines {
       Archive.writeCsvZip(joLongDump(cached), new java.io.File(outDir, zipName),
         "JO by Type, Ind and Occ for BC and Regions (long).csv")
       written :+ zipName
-    } finally {
-      cached.employment.unpersist()
-      cached.jobOpenings.unpersist()
-    }
+    } finally cached.jobOpenings.unpersist()
   }
 }

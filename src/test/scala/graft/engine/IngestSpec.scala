@@ -39,6 +39,25 @@ class IngestSpec extends SparkSpec {
     assert(cleaned.columns.toSeq === Seq("NOC", "Description", "Income"))
   }
 
+  test("removeEmpty keeps a column null in every row of one file but not of another, in one job") {
+    val dir = Files.createTempDirectory("sparse").toFile
+    def write(name: String, rows: String*): Unit = {
+      val w = new java.io.PrintWriter(new java.io.File(dir, name))
+      w.println("preamble 1"); w.println("preamble 2"); w.println("")
+      w.println("NOC,Income,Empty")
+      rows.foreach(w.println)
+      w.close()
+    }
+    write("a.csv", "#1,,", "#2,,")
+    write("b.csv", "#3,7.5,")
+    val df = Ingest.removeEmptyRows(Ingest.readCsv(spark, s"$dir/*.csv", skip = 3))
+    lazy val cleaned = Ingest.removeEmptyCols(df)
+    assert(jobsDuring(cleaned) === 1)
+    assert(cleaned.columns.toSeq === Seq("NOC", "Income"))
+    assert(cleaned.collect().map(r => r.getString(0) -> Option(r.get(1))).sortBy(_._1).toSeq ===
+      Seq("#1" -> None, "#2" -> None, "#3" -> Some(7.5)))
+  }
+
   test("multi-file glob: the preamble is skipped in EVERY file") {
     val dir = Files.createTempDirectory("multi").toFile
     for (i <- 1 to 3) {

@@ -2,7 +2,9 @@ package graft.engine
 
 import graft.SparkSpec
 import graft.fixtures.LmoFixtures
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Golden end-to-end checks of the ten artifact pipelines
   * (SURVEY.md §2.11) over the LMO-shaped fixtures, ingested through
@@ -204,6 +206,72 @@ class PipelinesSpec extends SparkSpec {
     // header + 6 nocs × 3 ind × 3 vars × 3 areas × 11 years
     assert(lines.size === 1 + 6 * 3 * 3 * 3 * 11)
     assert(lines.head.split(",").takeRight(2).toSeq === Seq("year", "value"))
+  }
+
+  /** The six horizon artifacts as the reference states them: workbook,
+    * CAGRs (employment) or sums (job openings), and the filter on the
+    * long form's group keys.
+    */
+  private val horizonFilters: Seq[(String, Boolean, Column)] = {
+    val notNorthSouthEast = !col("geographic_area").isin("North", "South East")
+    val joTypes = col("variable").isin("Job Openings", "Expansion Demand", "Replacement Demand")
+    Seq(
+      ("Employment by Industry and Occupation for BC.xlsx", true,
+        col("geographic_area") === "British Columbia"),
+      ("Employment by Industry for BC and Regions.xlsx", true,
+        col("noc") === "#T" && notNorthSouthEast),
+      ("Job Openings by Industry and Occupation for BC.xlsx", false,
+        col("geographic_area") === "British Columbia" && col("variable") === "Job Openings"),
+      ("JO by Type, Ind and Occ for BC and Regions.xlsx", false, joTypes),
+      ("Employment by Occupation for BC and Regions.xlsx", true,
+        col("industry") === "All industries" && notNorthSouthEast),
+      ("Job Openings by Type and Occ for BC and Regions.xlsx", false,
+        col("industry") === "All industries" && joTypes && notNorthSouthEast))
+  }
+
+  /** Each horizon artifact of `allWorkbooks` (all drawn from one plan
+    * per fact input) equals its own `horizonTable`: same columns, types
+    * and rows in the same order; its sheets collect without a Spark job.
+    */
+  private def checkSharedHorizons(in: Pipelines.LmoInputs): Unit = {
+    val built = Pipelines.allWorkbooks(in, fyod).map(a => a.fileName -> a).toMap
+    horizonFilters.foreach { case (file, useCagrs, keys) =>
+      val src = if (useCagrs) in.employment else in.jobOpenings
+      val expected = Pipelines.horizonTable(src, fyod, useCagrs)(_.filter(keys))
+      val got = built(file).sheets.head.df
+      assert(got.schema.map(f => f.name -> f.dataType) ===
+        expected.schema.map(f => f.name -> f.dataType), file)
+      assert(got.collect().toSeq === expected.collect().toSeq, file)
+    }
+    val sheets = horizonFilters.flatMap { case (file, _, _) => built(file).sheets }
+    assert(sheets.size > horizonFilters.size) // region sheets included
+    assert(jobsDuring(sheets.foreach(_.df.collect())) === 0)
+  }
+
+  test("horizon artifacts from one plan per fact input equal their own horizonTable") {
+    checkSharedHorizons(in)
+  }
+
+  test("shared horizons with a null key, North/South East rows and a group missing a year") {
+    val mem = LmoFixtures.inputs(spark)
+    def extra(src: org.apache.spark.sql.DataFrame, variable: String) = {
+      val series = LmoFixtures.years.map(y => 100.0 + y - fyod)
+      val gap = series.updated(5, null) // no value at fyod + 5
+      val rows = Seq(
+        Seq("#T", "All occupations", "All industries", variable, null) ++ series,
+        Seq(null, "No code", "All industries", variable, "British Columbia") ++ series,
+        Seq("#T", "All occupations", null, variable, "British Columbia") ++ series,
+        Seq("#55555", "Gap year", "All industries", variable, "British Columbia") ++ gap,
+        Seq("#55555", "Gap year", "All industries", variable, "North") ++ gap)
+      src.union(spark.createDataFrame(rows.map(Row.fromSeq).asJava, src.schema))
+    }
+    val in2 = mem.copy(employment = extra(mem.employment, "Employment"),
+      jobOpenings = extra(mem.jobOpenings, "Job Openings"))
+    checkSharedHorizons(in2)
+    // the planted gap reaches the tables: a null CAGR where fyod + 5 is missing
+    val a1 = Pipelines.employmentByIndustryOccupationBC(in2, fyod).sheets.head.df
+    val gapRow = a1.filter(col("NOC") === "#55555").collect()
+    assert(gapRow.length === 1 && gapRow.head.isNullAt(gapRow.head.fieldIndex("1st 5-year CAGR")))
   }
 
   test("buildAll leaves nothing persisted and only the ten artifacts in its directory") {

@@ -2,9 +2,7 @@ package graft.sinks
 
 import graft.SparkSpec
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.zip.ZipFile
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 import scala.xml.XML
@@ -121,34 +119,6 @@ class XlsxSpec extends SparkSpec {
     assert(Xlsx.colLetter(25) === "Z")
     assert(Xlsx.colLetter(26) === "AA")
     assert(Xlsx.colLetter(27 + 26) === "BB")
-  }
-
-  /** Spark jobs started while `body` runs. The listener bus delivers
-    * events in order, so a marker job before and after `body` bounds
-    * exactly its jobs once the second marker has been seen.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        seen.add(Option(j.properties).map(_.getProperty("spark.job.description", "")).getOrElse(""))
-    }
-    def marker(name: String): Unit = {
-      sc.setJobDescription(name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("xlsx-spec-begin")
-      body
-      marker("xlsx-spec-end")
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains("xlsx-spec-end") && System.nanoTime() < deadline) Thread.sleep(10)
-      val events = seen.asScala.toSeq
-      assert(events.contains("xlsx-spec-end"), "listener never saw the end marker")
-      events.dropWhile(_ != "xlsx-spec-begin").drop(1).takeWhile(_ != "xlsx-spec-end").size
-    } finally sc.removeSparkListener(listener)
   }
 
   /** A frame that fails at run time, when its third row is computed. */
