@@ -35,11 +35,11 @@ object Skew {
     * parallelism (r18 optimization round, guide §2). AQE's partition
     * coalescing targets BYTES (the advisory partition size), which is
     * exactly wrong for operators whose per-row cost dwarfs their row
-    * width — interpreted DP token metrics (~maxTokens³ ≈ 14k integer
-    * ops over a ~200-byte row), positional codec decodes, per-row
-    * container construction. At bench scale the whole frame coalesces
-    * to ONE task (measured: q354/q361 ran their 7–8 s DP stage on a
-    * single core with 31 idle); at cluster scale a bytes-sized
+    * width — DP token metrics, per-pair n-gram counts, positional
+    * codec decodes, per-row container construction. At bench scale
+    * the whole frame coalesces to ONE task (measured: q354/q361 ran
+    * their then-interpreted 7–8 s DP stage on a single core with 31
+    * idle); at cluster scale a bytes-sized
     * partition of such rows is minutes of single-task compute the
     * same way. The fix is an explicit hash repartition on the row key
     * to the session's spark.sql.shuffle.partitions — an explicitly

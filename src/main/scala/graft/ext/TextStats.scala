@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.engine.TrackedCache.Trackable
+import graft.functions.PairCounts
 
 /** Text analysis for large-scale training-data pipelines: token
   * counting, quality scoring, fingerprinting, language ID. Everything
@@ -334,58 +335,28 @@ object TextStats {
     * and (β=1) F = 2·LCS/(|cand|+|ref|) — the harmonic mean collapses
     * to one integer-ratio division exactly as in [[answerTokenF1]].
     * Token sequences are CAPPED at `maxTokens` per side (documented
-    * truncation — ROUGE on document-scale texts is a chunked metric;
-    * the cap is what bounds the DP below and the oracle's unrolled
-    * replay).
+    * truncation — ROUGE on document-scale texts is a chunked metric).
+    * A NULL side scores a NULL `lcs`.
     *
-    * The LCS length is computed as a row-DP fold entirely INSIDE one
-    * expression: state = the DP row over reference positions, folded
-    * once per candidate token. The classic recurrence has an
-    * intra-row dependency (new[j] needs new[j−1]); it is rewritten
-    * dependency-free using the DP-row monotonicity property as
-    *   new[j] = max(prev[j], max_{i≤j}(prev[i−1] + eq_i))
-    * — a prefix-max, so each step is a pure per-element transform
-    * both engines replay identically in exact integers. O(m·n²) per
-    * pair instead of O(m·n), a deliberate trade: with m,n ≤ maxTokens
-    * the constant is ≤ maxTokens³ ≈ 14k integer ops per pair, and the
-    * dependency-free form is what the unrolled DuckDB oracle chain
-    * can mirror step-for-step.
+    * The LCS length is the textbook O(m·n) row DP, run natively per
+    * row by [[graft.functions.PairCounts.tokenLcs]]. Any exact DP over
+    * the same capped tokens gives the same integer, so the DuckDB
+    * oracle (an unrolled prefix-max fold) agrees bit for bit.
     *
-    * Scale shape: map-only — tokenize+cap in one projection (the
-    * HOF re-inline rule), the whole DP in the next; no explode, no
-    * join, no shuffle. Output one row per pair.
+    * Scale shape: map-only — tokenize+cap in one projection, the
+    * kernel in the next (computed once; the three ratios read its
+    * column); no explode, no join, no aggregate. Output one row per
+    * pair.
     */
   def rougeL(pairs: DataFrame, maxTokens: Int = 24,
              idCol: String = "pair_id", candCol: String = "cand_text",
              refCol: String = "ref_text"): DataFrame = {
     require(maxTokens >= 1, s"rougeL: maxTokens >= 1, got $maxTokens")
-    // capped token arrays in their OWN projection (HOF re-inline rule);
-    // the DP below is compute-dense (≈ maxTokens³ interpreted integer
-    // ops per pair over ~200-byte rows), so spread the thin token rows
-    // across the session's shuffle parallelism first — AQE's
-    // bytes-targeted coalescing otherwise runs the whole DP on one
-    // task (measured 7.8 s single-core at sf0.1, 31 cores idle)
-    val toks = graft.engine.Skew.spreadForCompute(
-      pairs.select(col(idCol),
-        slice(tokens(col(candCol)), 1, maxTokens).as("_ct"),
-        slice(tokens(col(refCol)), 1, maxTokens).as("_rt")),
-      col(idCol))
-    val dp = toks.withColumn("_dp", expr(
-      """aggregate(
-        |  _ct,
-        |  array_repeat(CAST(0 AS BIGINT), size(_rt) + 1),
-        |  (prev, ctok) -> concat(
-        |    array(CAST(0 AS BIGINT)),
-        |    transform(sequence(1, size(_rt)), j ->
-        |      greatest(
-        |        element_at(prev, j + 1),
-        |        array_max(transform(sequence(1, j), i ->
-        |          element_at(prev, i) +
-        |            IF(element_at(_rt, i) = ctok, 1L, 0L)))))))""".stripMargin))
-    dp.select(col(idCol),
+    cappedTokens(pairs, maxTokens, idCol, candCol, refCol)
+      .select(col(idCol),
         size(col("_ct")).cast("long").as("cand_len"),
         size(col("_rt")).cast("long").as("ref_len"),
-        element_at(col("_dp"), size(col("_rt")) + 1).as("lcs"))
+        PairCounts.tokenLcs(col("_ct"), col("_rt")).as("lcs"))
       .select(col(idCol), col("cand_len"), col("ref_len"), col("lcs"),
         round(col("lcs").cast("double") / col("cand_len"), 6)
           .as("rouge_l_p"),
@@ -395,6 +366,19 @@ object TextStats {
           .as("rouge_l_f"))
       .orderBy(idCol)
   }
+
+  /** Each pair's token arrays capped at `maxTokens`, in their own
+    * projection, spread across the session's shuffle parallelism:
+    * the pair kernels are compute-dense over thin rows, and AQE's
+    * bytes-targeted coalescing would otherwise run them on one task.
+    */
+  private def cappedTokens(pairs: DataFrame, maxTokens: Int, idCol: String,
+                           candCol: String, refCol: String): DataFrame =
+    graft.engine.Skew.spreadForCompute(
+      pairs.select(col(idCol),
+        slice(tokens(col(candCol)), 1, maxTokens).as("_ct"),
+        slice(tokens(col(refCol)), 1, maxTokens).as("_rt")),
+      col(idCol))
 
   /** chrF (Popović 2015, "chrF: character n-gram F-score") over
     * (candidate, reference) pairs — the character-level generation
@@ -406,77 +390,44 @@ object TextStats {
     * sacrebleu cross-check must pass its lowercase option),
     * macro-averaged over orders, combined with
     * β = 2 (recall weighted double — chrF2):
-    * chrF2 = 5·P·R / (4·P + R).
+    * chrF2 = 5·P·R / (4·P + R). Grams are code points, the unit of
+    * `length`; a NULL side counts as empty (scores 0).
     *
     * Engine-exactness: each order's P_n/R_n is ONE integer ratio
-    * quantized to a 1e-9 BIGINT before the per-pair sum (the
-    * bcubed/IPF discipline — integer additions are order-free, so
-    * the shuffle can't reorder float accumulation), and the final
-    * chrF2 is one mirrored double expression over the two quantized
-    * sums. Orders longer than a side contribute 0 (denominators clamp
-    * at 1) — the documented simplification vs sacrebleu's effective-
-    * order handling, applied identically in both engines.
+    * quantized to a 1e-9 BIGINT before the per-pair sum (integer
+    * additions are order-free), and the final chrF2 is one mirrored
+    * double expression over the two quantized sums. Orders longer
+    * than a side contribute 0 (denominators clamp at 1) — the
+    * documented simplification vs sacrebleu's effective-order
+    * handling, applied identically in both engines.
     *
-    * Scale shape: per-order totals come straight from string lengths
-    * (no aggregation); the clipped counts take ONE side-tagged
-    * (pair, n, gram) count shuffle — both sides' grams unioned into
-    * a single long frame, per-side counts as conditional sums, so no
-    * gram-level join exists (n-gram explode in relational long form:
-    * positions exploded, substring on the exploded rows, codegen).
-    * One pair rollup; no windows.
+    * Scale shape: map-only. The clipped counts never cross pairs, so
+    * [[graft.functions.PairCounts.chrfClipped]] counts every order's
+    * grams inside the row (one array column, computed once); the
+    * per-order gram totals come from string lengths and the
+    * quantized sums are unrolled over n. No explode, no join, no
+    * aggregate.
     */
   def chrF(pairs: DataFrame, maxN: Int = 6, idCol: String = "pair_id",
            candCol: String = "cand_text",
            refCol: String = "ref_text"): DataFrame = {
     require(maxN >= 1, s"chrF: maxN >= 1, got $maxN")
-    // NOT persisted: 3 consumers re-strip the text, but measured
-    // (sf0.1 min-of-3) recompute beats the cache write + memory
-    // pressure of materializing corpus-scale strings (6.55 s vs 7.04).
-    // Spread first (q354 rule): the gram explode + partial count that
-    // feeds the clipped-count shuffle is ~12×len codegen'd rows per
-    // pair — at bench scale AQE's bytes-coalescing left that map
-    // stage on the scan's single input partition
-    val chars = graft.engine.Skew.spreadForCompute(
-      pairs.select(col(idCol),
-        regexp_replace(lower(col(candCol)), "\\s+", "").as("_c"),
-        regexp_replace(lower(col(refCol)), "\\s+", "").as("_r")),
-      col(idCol))
-    // both sides' grams in ONE side-tagged long frame → a single
-    // (pair, n, gram) count shuffle with both per-side counts as
-    // conditional sums — no gram-level join at all (the former
-    // two-aggregate + sort-merge-join shape shuffled the same bytes
-    // twice and sorted them once more)
-    def gramsOf(side: String, tag: Int): DataFrame = chars
-      .select(col(idCol), col(side).as("_s"), lit(tag).as("_side"),
-        explode(sequence(lit(1), lit(maxN))).as("_n"))
-      .filter(length(col("_s")) >= col("_n"))
-      .select(col(idCol), col("_n"), col("_side"), col("_s"),
-        explode(sequence(lit(1), length(col("_s")) - col("_n") + 1))
-          .as("_p"))
-      .select(col(idCol), col("_n"), col("_side"),
-        expr("substring(_s, _p, _n)").as("_g"))
-    val clipped = gramsOf("_c", 0).unionByName(gramsOf("_r", 1))
-      .groupBy(col(idCol), col("_n"), col("_g"))
-      .agg(sum(when(col("_side") === 0, 1L).otherwise(0L)).as("_cc"),
-        sum(when(col("_side") === 1, 1L).otherwise(0L)).as("_cr"))
-      .filter(col("_cc") > 0L && col("_cr") > 0L)
-      .groupBy(col(idCol), col("_n"))
-      .agg(sum(least(col("_cc"), col("_cr"))).as("_cl"))
-    val spine = chars.select(col(idCol),
+    def stripped(c: String): Column =
+      coalesce(regexp_replace(lower(col(c)), "\\s+", ""), lit(""))
+    val counts = graft.engine.Skew.spreadForCompute(
+        pairs.select(col(idCol), stripped(candCol).as("_c"),
+          stripped(refCol).as("_r")),
+        col(idCol))
+      .select(col(idCol),
         length(col("_c")).cast("long").as("_lc"),
         length(col("_r")).cast("long").as("_lr"),
-        explode(sequence(lit(1), lit(maxN))).as("_n"))
-      .select(col(idCol), col("_n"),
-        greatest(col("_lc") - col("_n") + 1L, lit(0L)).as("_tc"),
-        greatest(col("_lr") - col("_n") + 1L, lit(0L)).as("_tr"))
-    val per = spine.join(clipped, Seq(idCol, "_n"), "left")
-      .select(col(idCol),
-        round(lit(1e9) * coalesce(col("_cl"), lit(0L)) /
-          greatest(col("_tc"), lit(1L))).cast("long").as("_pu"),
-        round(lit(1e9) * coalesce(col("_cl"), lit(0L)) /
-          greatest(col("_tr"), lit(1L))).cast("long").as("_ru"))
-    per.groupBy(col(idCol))
-      .agg(sum("_pu").as("_sp"), sum("_ru").as("_sr"))
+        PairCounts.chrfClipped(col("_c"), col("_r"), maxN).as("_cl"))
+    // Σ_n round(1e9 · clipped_n / max(len − n + 1, 1))
+    def quantizedSum(len: String): Column = (1 to maxN).map(n =>
+      round(lit(1e9) * col("_cl").getItem(n - 1) /
+        greatest(col(len) - (n - 1L), lit(1L))).cast("long")).reduce(_ + _)
+    counts.select(col(idCol), quantizedSum("_lc").as("_sp"),
+        quantizedSum("_lr").as("_sr"))
       .select(col(idCol),
         round(col("_sp").cast("double") / (maxN * 1e9), 6).as("chrf_p"),
         round(col("_sr").cast("double") / (maxN * 1e9), 6).as("chrf_r"),
@@ -2662,59 +2613,27 @@ object TextStats {
     * the shift search is disabled): word-level Levenshtein distance
     * between candidate and reference token prefixes (capped at
     * `maxTokens`, the [[rougeL]] discipline), WER = edits / ref_len.
+    * Pairs with a NULL side are unscorable and dropped.
     *
-    * The row DP new[j] = min(prev[j]+1, new[j−1]+1, prev[j−1]+sub_j)
-    * carries a sequential within-row dependency; it folds inside ONE
-    * expression via the prefix-min rewrite
-    * new[j] = min_{i≤j}(c_i + (j − i)) with
-    * c_0 = prev[0]+1, c_i = min(prev[i]+1, prev[i−1]+sub_i) —
-    * valid because trailing insertions cost exactly 1 each —
-    * deliberately O(m·n²) ≤ maxTokens³ INTEGER ops per pair so the
-    * DuckDB oracle can unroll the identical steps as MATERIALIZED
-    * CTEs (integer DP ⇒ bit-exact cross-engine; the q354 pattern).
+    * The edit count is the textbook O(m·n) row DP, run natively per
+    * row by [[graft.functions.PairCounts.tokenEdits]]; the DuckDB
+    * oracle unrolls a prefix-min fold over the same capped tokens and
+    * reaches the same integer.
     *
-    * Scale shape: map-only — the DP folds inside one projection; the
-    * single rounded division happens per row. No joins, no windows.
+    * Scale shape: map-only — the kernel in one projection, the single
+    * rounded division per row. No joins, no windows.
     */
   def wer(pairs: DataFrame, maxTokens: Int = 24,
           idCol: String = "pair_id", candCol: String = "cand_text",
           refCol: String = "ref_text"): DataFrame = {
     require(maxTokens >= 1, s"wer: maxTokens >= 1, got $maxTokens")
-    // capped token arrays in their OWN projection (HOF re-inline
-    // rule); NULL-side pairs are unscorable (size(NULL) is −1) — drop.
-    // Spread before the DP: compute-dense per-row work, the q354 rule
-    // (AQE bytes-coalescing otherwise single-tasks the DP stage)
-    val toks = graft.engine.Skew.spreadForCompute(
-      pairs
-        .filter(col(idCol).isNotNull && col(candCol).isNotNull &&
-          col(refCol).isNotNull)
-        .select(col(idCol),
-          slice(tokens(col(candCol)), 1, maxTokens).as("_ct"),
-          slice(tokens(col(refCol)), 1, maxTokens).as("_rt")),
-      col(idCol))
-    // the single-element-array transform is a LET binding: the c_i
-    // candidate row (prev[i]+1 / prev[i−1]+sub_i) is built ONCE per
-    // DP row instead of being re-derived inside every j's prefix-min
-    // (interpreted-HOF eval re-runs lambda bodies per element —
-    // measured ~2× on the inner-op count)
-    val dp = toks.withColumn("_dp", expr(
-      """aggregate(
-        |  _ct,
-        |  transform(sequence(0, size(_rt)), x -> CAST(x AS BIGINT)),
-        |  (prev, ctok) -> transform(
-        |    array(transform(sequence(0, size(_rt)), i ->
-        |      IF(i = 0,
-        |         element_at(prev, 1) + 1L,
-        |         least(element_at(prev, i + 1) + 1L,
-        |           element_at(prev, i) +
-        |             IF(element_at(_rt, i) = ctok, 0L, 1L))))),
-        |    c -> transform(sequence(0, size(_rt)), j ->
-        |      array_min(transform(sequence(0, j), i ->
-        |        element_at(c, i + 1) + CAST(j - i AS BIGINT)))))[0])""".stripMargin))
-    dp.select(col(idCol),
+    val scorable = pairs.filter(col(idCol).isNotNull &&
+      col(candCol).isNotNull && col(refCol).isNotNull)
+    cappedTokens(scorable, maxTokens, idCol, candCol, refCol)
+      .select(col(idCol),
         size(col("_ct")).cast("long").as("cand_len"),
         size(col("_rt")).cast("long").as("ref_len"),
-        element_at(col("_dp"), size(col("_rt")) + 1).as("edits"))
+        PairCounts.tokenEdits(col("_ct"), col("_rt")).as("edits"))
       .select(col(idCol), col("cand_len"), col("ref_len"), col("edits"),
         when(col("ref_len") > 0L,
           round(col("edits").cast("double") / col("ref_len"), 6))

@@ -3475,12 +3475,14 @@ object TextQueries {
     },
 
     // ——— ROUGE-L (Lin 2004) over q350's adjacent-doc pairs: LCS
-    //     recall/precision/F on 24-token-capped sequences. The LCS
-    //     row-DP is folded inside ONE Spark expression using the
-    //     dependency-free prefix-max recurrence; the oracle unrolls
-    //     the identical 24 steps as MATERIALIZED CTEs (the btChainSql
-    //     discipline — the dp column is referenced several times per
-    //     step, so an inlining planner would go exponential). ———
+    //     recall/precision/F on 24-token-capped sequences. Spark runs
+    //     the O(m·n) LCS row DP natively per pair
+    //     (`PairCounts.tokenLcs`); the oracle unrolls the
+    //     dependency-free prefix-max recurrence over the same capped
+    //     tokens as 24 MATERIALIZED CTEs (the btChainSql discipline —
+    //     the dp column is referenced several times per step, so an
+    //     inlining planner would go exponential). Both are exact
+    //     integer DPs, so they agree bit for bit. ———
     Q("q354_rouge_l", {
       val L = 24
       val steps = (1 to L).map { t =>
@@ -3534,8 +3536,9 @@ object TextQueries {
     //     1..6-gram precision/recall (whitespace stripped),
     //     macro-averaged over orders with per-order 1e-9 quantization
     //     (integer sums are shuffle-order-free), β=2 recall weighting.
-    //     Per-order totals come straight from string lengths; only
-    //     the clipped counts join. ———
+    //     Per-order totals come straight from string lengths; Spark
+    //     counts the clipped grams inside each pair's row
+    //     (`PairCounts.chrfClipped`), the oracle with a gram join. ———
     Q("q358_chrf",
       """WITH p AS (
         |  SELECT a.doc_id AS pair_id, a.text AS ct, b.text AS rt
@@ -3720,11 +3723,11 @@ object TextQueries {
 
     // ——— word error rate (TER without shifts) over q354's pair
     //     fixture: word-level Levenshtein on 24-token-capped prefixes.
-    //     The within-row sequential DP dependency folds inside one
-    //     expression via the prefix-min rewrite
-    //     new[j] = min_{i≤j}(c_i + (j−i)) (trailing insertions cost 1
-    //     each); integer DP ⇒ bit-exact against the 24-step
-    //     MATERIALIZED-CTE unroll. ———
+    //     Spark runs the O(m·n) row DP natively per pair
+    //     (`PairCounts.tokenEdits`); the oracle unrolls the prefix-min
+    //     rewrite new[j] = min_{i≤j}(c_i + (j−i)) (trailing insertions
+    //     cost 1 each) as 24 MATERIALIZED CTEs. Integer DPs ⇒
+    //     bit-exact. ———
     Q("q361_wer", {
       val L = 24
       val steps = (1 to L).map { t =>

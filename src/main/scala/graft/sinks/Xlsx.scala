@@ -76,7 +76,10 @@ object Xlsx {
   }
 
   private def writeParts(sheets: Seq[Sheet], zip: ZipOutputStream): Unit = {
-    val zipWriter = new java.io.OutputStreamWriter(zip, "UTF-8")
+    // worksheets arrive in small parts (several per cell): buffer them
+    // so the UTF-8 encoder runs over large chunks, not once per part
+    val zipWriter = new java.io.BufferedWriter(
+      new java.io.OutputStreamWriter(zip, "UTF-8"), 1 << 16)
     def streamPart(name: String)(body: java.io.Writer => Unit): Unit = {
       val e = new ZipEntry(name)
       e.setTime(FixedZipTime) // reproducible bytes: same input → same file
@@ -167,39 +170,54 @@ object Xlsx {
   }
 
   /** The worksheet XML of one collected sheet; each cell goes straight
-    * to the zip stream, so no sheet-sized String is built.
+    * to the zip stream in parts, so neither a sheet-sized nor a
+    * per-cell String is built. Column letters and styles are built
+    * once per sheet.
     */
   private def writeSheetXml(sheet: Sheet, rows: Array[Row], w: java.io.Writer): Unit = {
-    val header = sheet.df.columns.toSeq
-    val nCols = header.size
+    val header = sheet.df.columns
+    val nCols = header.length
     val pctFrom = if (sheet.pctLast3) math.max(nCols - 3, 0) else nCols
+    // per column: `<c r="AB` before the row number, and for each cell
+    // type everything from the end of the reference to the value
+    val refOpen = Array.tabulate(nCols)(c => "<c r=\"" + colLetter(c))
+    def middle(tpe: String, open: String): Array[String] = Array.tabulate(nCols) { c =>
+      val style = if (c >= pctFrom) " s=\"1\"" else ""
+      "\" t=\"" + tpe + "\"" + style + ">" + open
+    }
+    val numMid = middle("n", "<v>")
+    val boolMid = middle("b", "<v>")
+    val strMid = middle("inlineStr", "<is><t>")
     w.write("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""")
     // xmlns:r must be bound on the root: asTable sheets reference the
     // table part via r:id, and an unbound prefix is rejected by
     // namespace-aware readers (Excel, openpyxl)
     w.write("""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships"><sheetData>""")
-    def cell(r: Int, c: Int, v: Any): Unit = {
-      if (v == null) return
-      val ref = s"${colLetter(c)}$r"
-      val style = if (c >= pctFrom) """ s="1"""" else ""
+    def cell(r: String, c: Int, v: Any): Unit = if (v != null) {
+      w.write(refOpen(c)); w.write(r)
       v match {
         case d: Double if d.isNaN || d.isInfinite =>
-          w.write(s"""<c r="$ref" t="inlineStr"$style><is><t>$d</t></is></c>""")
+          w.write(strMid(c)); w.write(d.toString); w.write("</t></is></c>")
         case _: Double | _: Float | _: Int | _: Long | _: Short | _: java.math.BigDecimal =>
-          w.write(s"""<c r="$ref" t="n"$style><v>$v</v></c>""")
+          w.write(numMid(c)); w.write(v.toString); w.write("</v></c>")
         case b: Boolean =>
-          w.write(s"""<c r="$ref" t="b"$style><v>${if (b) 1 else 0}</v></c>""")
+          w.write(boolMid(c)); w.write(if (b) "1</v></c>" else "0</v></c>")
         case other =>
-          w.write(s"""<c r="$ref" t="inlineStr"$style><is><t>${escape(other.toString)}</t></is></c>""")
+          w.write(strMid(c)); w.write(escape(other.toString)); w.write("</t></is></c>")
       }
     }
-    w.write("""<row r="1">""")
-    header.zipWithIndex.foreach { case (h, c) => cell(1, c, h) }
-    w.write("</row>")
-    rows.iterator.zipWithIndex.foreach { case (row, ri) =>
-      w.write(s"""<row r="${ri + 2}">""")
-      (0 until nCols).foreach { c => cell(ri + 2, c, if (row.isNullAt(c)) null else row.get(c)) }
+    def row(r: String)(cells: Int => Any): Unit = {
+      w.write("<row r=\""); w.write(r); w.write("\">")
+      var c = 0
+      while (c < nCols) { cell(r, c, cells(c)); c += 1 }
       w.write("</row>")
+    }
+    row("1")(header(_))
+    var ri = 0
+    while (ri < rows.length) {
+      val values = rows(ri)
+      row(Integer.toString(ri + 2))(c => if (values.isNullAt(c)) null else values.get(c))
+      ri += 1
     }
     w.write("</sheetData>") // caller appends tableParts + </worksheet>
   }
@@ -214,7 +232,29 @@ object Xlsx {
     s
   }
 
-  def escape(s: String): String =
-    s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-      .replace("\"", "&quot;")
+  /** XML-escapes `&`, `<`, `>` and `"` in one pass; returns `s`
+    * itself when none occurs.
+    */
+  def escape(s: String): String = {
+    var i = 0
+    while (i < s.length && !needsEscape(s.charAt(i))) i += 1
+    if (i == s.length) s
+    else {
+      val sb = new java.lang.StringBuilder(s.length + 16).append(s, 0, i)
+      while (i < s.length) {
+        s.charAt(i) match {
+          case '&' => sb.append("&amp;")
+          case '<' => sb.append("&lt;")
+          case '>' => sb.append("&gt;")
+          case '"' => sb.append("&quot;")
+          case ch => sb.append(ch)
+        }
+        i += 1
+      }
+      sb.toString
+    }
+  }
+
+  private def needsEscape(ch: Char): Boolean =
+    ch == '&' || ch == '<' || ch == '>' || ch == '"'
 }

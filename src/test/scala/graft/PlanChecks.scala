@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, ExprId, ExpressionSet, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, LocalLimit, Project, Window => LWindow}
 import org.apache.spark.sql.execution.{LocalTableScanExec, ProjectExec, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
@@ -127,6 +128,24 @@ object PlanChecks {
     walk(df.queryExecution.executedPlan)
     out.toSeq
   }
+
+  /** Every node of `df`'s executed plan, seen through adaptive
+    * execution and its query stages. Run the frame first to see AQE's
+    * final plan (query stages, whole-stage codegen).
+    */
+  def executedNodes(df: DataFrame): Seq[SparkPlan] =
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case n => n
+    }
+
+  /** How often an expression of class `cls` occurs in the nodes' own
+    * expressions — 1 for a kernel computed once and read by column,
+    * more when `CollapseProject` has inlined it into its consumers.
+    */
+  def expressionCount(nodes: Seq[SparkPlan], cls: Class[_]): Int =
+    nodes.map(_.expressions.map(_.collect {
+      case e if cls.isInstance(e) => e
+    }.size).sum).sum
 
   def rowScaleGlobalWindows(df: DataFrame): Seq[String] = {
     val plan = df.queryExecution.optimizedPlan

@@ -867,6 +867,36 @@ class TextStatsSpec extends SparkSpec {
     assert(f > 2.0 * p * r / (p + r) - 1e-9, "β=2 must sit above β=1")
   }
 
+  test("q358/q354/q361 plans: each pair kernel is computed once, in " +
+    "whole-stage codegen, with no Generate, no aggregate and no " +
+    "shuffle but the spread and the final sort") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.{GenerateExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import graft.functions.{ChrFClipped, TokenEdits, TokenLcs}
+    for ((q, kernel) <- Seq("q358_chrf" -> classOf[ChrFClipped],
+        "q354_rouge_l" -> classOf[TokenLcs], "q361_wer" -> classOf[TokenEdits])) {
+      val df = graft.SparkEntry.queries(q)(spark, sf001)
+      df.collect() // AQE's final plan: query stages, codegen stages
+      val nodes = graft.PlanChecks.executedNodes(df)
+      val plan = df.queryExecution.executedPlan.treeString
+      // CollapseProject would inline the kernel into each consumer
+      // (2 × maxN quantization terms for chrF, 3 ratios for rougeL)
+      assert(graft.PlanChecks.expressionCount(nodes, kernel) === 1,
+        s"$q computes ${kernel.getSimpleName} more than once:\n$plan")
+      val inCodegen = nodes.collect { case w: WholeStageCodegenExec => w }
+        .exists(_.child.exists(_.expressions.exists(_.exists(kernel.isInstance))))
+      assert(inCodegen, s"$q runs ${kernel.getSimpleName} outside whole-stage codegen:\n$plan")
+      assert(!nodes.exists(n => n.isInstanceOf[GenerateExec] ||
+        n.isInstanceOf[BaseAggregateExec]), s"$q explodes or aggregates:\n$plan")
+      val shuffles = nodes.collect { case s: ShuffleExchangeExec => s }
+      assert(shuffles.forall(s => s.shuffleOrigin == REPARTITION_BY_NUM ||
+        s.outputPartitioning.isInstanceOf[RangePartitioning]),
+        s"$q shuffles for more than the spread and the sort:\n$plan")
+    }
+  }
+
   test("distinctN: identical roster collapses toward 1/k; fully " +
     "distinct tokens score 1; bigram totals are per-response") {
     val collapsed = Seq.fill(4)((0L, "same answer text"))

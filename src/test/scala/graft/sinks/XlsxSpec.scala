@@ -121,6 +121,33 @@ class XlsxSpec extends SparkSpec {
     assert(Xlsx.colLetter(27 + 26) === "BB")
   }
 
+  test("escape: one pass equals the four replaces, and returns its input when nothing needs escaping") {
+    def chained(s: String) = s.replace("&", "&amp;").replace("<", "&lt;")
+      .replace(">", "&gt;").replace("\"", "&quot;")
+    for (s <- Seq("", "plain", "a & <b> \"c\" &amp;", "&", "tail>", "é & 😀"))
+      assert(Xlsx.escape(s) === chained(s))
+    val plain = "no special characters"
+    assert(Xlsx.escape(plain) eq plain)
+  }
+
+  test("worksheet XML of every cell kind: references, types, styles, escaping, nulls") {
+    val df = Seq(("x\"<y", true, Double.NaN, 7L, Option.empty[String]))
+      .toDF("s", "b", "d", "l", "n")
+    val f = Files.createTempDirectory("xlsx").resolve("k.xlsx").toFile
+    Xlsx.write(Seq(Xlsx.Sheet("k", df, pctLast3 = true)), f)
+    def str(ref: String, v: String, style: String = "") =
+      s"""<c r="$ref" t="inlineStr"$style><is><t>$v</t></is></c>"""
+    val pct = """ s="1""""
+    assert(readPart(f, "xl/worksheets/sheet1.xml") ===
+      """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
+      """<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships"><sheetData>""" +
+      """<row r="1">""" + str("A1", "s") + str("B1", "b") + str("C1", "d", pct) +
+      str("D1", "l", pct) + str("E1", "n", pct) + "</row>" +
+      """<row r="2">""" + str("A2", "x&quot;&lt;y") + """<c r="B2" t="b"><v>1</v></c>""" +
+      str("C2", "NaN", pct) + s"""<c r="D2" t="n"$pct><v>7</v></c>""" + "</row>" +
+      "</sheetData></worksheet>")
+  }
+
   /** A frame that fails at run time, when its third row is computed. */
   private def failing = spark.range(0, 5, 1, 1)
     .select(when(col("id") === 2, raise_error(lit("injected sheet failure")))
