@@ -1,6 +1,10 @@
 package graft.engine
 
+import java.io.File
+import java.util.concurrent.{ExecutionException, FutureTask}
+
 import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Try}
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -34,8 +38,16 @@ import graft.sinks.{Archive, Xlsx}
   * then collects without a Spark job. HOO (artifact 4) pulls its
   * regional job openings once and builds every region's list from ONE
   * plan (the HOO columns stacked into (NOC, area) pairs, left-joined
-  * to the openings), split the same way. Only `buildAll`'s cached job
-  * openings are persisted, and it releases them in `finally`.
+  * to the openings), split the same way.
+  *
+  * `buildAll` runs six chains that share only the inputs, each on its
+  * own driver thread: each horizon plan with its three workbooks, HOO,
+  * the long employment sheet, the skill-cluster sheet and the long
+  * job-openings zip. One chain's planning, result pull and encoding
+  * overlap another's tasks. The job openings, which feed four chains,
+  * are the one cached input: persisted before the chains start and
+  * released after all have settled. A failure stops only its own
+  * chain's artifacts (see `buildAll`).
   *
   * Deliberate divergences from the reference, per SURVEY.md §7.4:
   *  - HOO sheets are joined to regions BY NORMALIZED NAME with an
@@ -349,24 +361,49 @@ object Pipelines {
         .orderBy("NOC"))))
   }
 
-  /** Build every workbook artifact (1-8, 10): one horizon plan per
-    * fact input for artifacts 1, 2, 7 and 3, 5, 8.
+  /** One artifact ready to write: a workbook, or the long job-openings
+    * zip (artifact 9).
     */
-  def allWorkbooks(in: LmoInputs, fyod: Int): Seq[Artifact] = {
-    val Seq(a1, a2, a7) = employmentArtifacts(in, fyod)(
-      employmentBC, employmentIndustryRegions, employmentOccupationRegions)
-    val Seq(a3, a5, a8) = jobOpeningsArtifacts(in, fyod)(
-      joBC, joByType, joTypeOccupationRegions)
-    Seq(a1, a2, a3, highOpportunityOccupations(in, fyod), a5,
-      employmentLongBCRegions(in), a7, a8, joBySkillCluster(in, fyod))
+  private sealed abstract class Output(val fileName: String) { def writeInto(dir: File): Unit }
+  private final case class Workbook(a: Artifact) extends Output(a.fileName) {
+    def writeInto(dir: File): Unit = Xlsx.write(a.sheets, new File(dir, fileName))
   }
+  private final case class LongZip(in: LmoInputs)
+      extends Output("JO by Type, Ind and Occ for BC and Regions (long).zip") {
+    def writeInto(dir: File): Unit = Archive.writeCsvZip(joLongDump(in), new File(dir, fileName),
+      "JO by Type, Ind and Occ for BC and Regions (long).csv")
+  }
+
+  /** A part of the catalog that shares only the inputs with the others:
+    * its thread's name, its artifacts' places in the fixed order
+    * (artifacts 1-8, 10, then the zip) and the artifacts, built together.
+    */
+  private final case class Chain(name: String, places: Seq[Int],
+                                 build: (LmoInputs, Int) => Seq[Output])
+
+  private val chains = Seq(
+    Chain("employment-horizon", Seq(1, 2, 7), (in, fyod) => employmentArtifacts(in, fyod)(
+      employmentBC, employmentIndustryRegions, employmentOccupationRegions).map(Workbook)),
+    Chain("job-openings-horizon", Seq(3, 5, 8), (in, fyod) => jobOpeningsArtifacts(in, fyod)(
+      joBC, joByType, joTypeOccupationRegions).map(Workbook)),
+    Chain("hoo", Seq(4), (in, fyod) => Seq(Workbook(highOpportunityOccupations(in, fyod)))),
+    Chain("employment-long", Seq(6), (in, _) => Seq(Workbook(employmentLongBCRegions(in)))),
+    Chain("skill-clusters", Seq(9), (in, fyod) => Seq(Workbook(joBySkillCluster(in, fyod)))),
+    Chain("job-openings-long", Seq(10), (in, _) => Seq(LongZip(in))))
+
+  /** Build every workbook artifact (1-8, 10), in that order: one horizon
+    * plan per fact input for artifacts 1, 2, 7 and 3, 5, 8.
+    */
+  def allWorkbooks(in: LmoInputs, fyod: Int): Seq[Artifact] =
+    chains.flatMap(c => c.places.zip(c.build(in, fyod))).sortBy(_._1)
+      .collect { case (_, Workbook(a)) => a }
 
   /** Data-plane output: every artifact's primary table lands as
     * Parquet (SCALE.md — the workbook is the human artifact; machine
     * consumers read columnar). Region-keyed tables are partitioned by
     * Geographic Area for downstream partition pruning.
     */
-  def writeDataPlane(in: LmoInputs, fyod: Int, dir: java.io.File): Seq[String] = {
+  def writeDataPlane(in: LmoInputs, fyod: Int, dir: File): Seq[String] = {
     dir.mkdirs()
     allWorkbooks(in, fyod).map { a =>
       val name = a.fileName.stripSuffix(".xlsx")
@@ -380,24 +417,38 @@ object Pipelines {
   }
 
   /** Run the whole catalog to an output directory — the reference's
-    * `source("01_source_me.R")` equivalent.
+    * `source("01_source_me.R")` equivalent. Returns the file names in
+    * the fixed order: artifacts 1-8, 10, then the zip.
+    *
+    * Each chain runs on a daemon thread `catalog-build-<chain>`, joined
+    * before this returns or throws. A failed artifact (all three of a
+    * failed horizon plan) leaves no file, and the others are still
+    * written. Once every chain has settled, the failure of the earliest
+    * failed artifact in the fixed order is rethrown as it was thrown.
     */
-  def buildAll(in: LmoInputs, fyod: Int, outDir: java.io.File): Seq[String] = {
+  def buildAll(in: LmoInputs, fyod: Int, outDir: File): Seq[String] = {
     outDir.mkdirs()
-    // job openings feed four plans (the horizon table, HOO, artifact 10
-    // and the long dump): cache them once instead of re-scanning and
-    // re-parsing per plan. Employment feeds two (its horizon table and
-    // artifact 6), where a cache measured no gain.
+    // job openings feed four chains: cached before they start, released
+    // after all have settled. Chains that reach the cache before it is
+    // filled each plan a cache stage, but each partition is computed
+    // once (block lock). Employment's two chains measured no gain.
     val cached = in.copy(jobOpenings = in.jobOpenings.cache())
     try {
-      val written = allWorkbooks(cached, fyod).map { a =>
-        Xlsx.write(a.sheets, new java.io.File(outDir, a.fileName))
-        a.fileName
+      val runs = chains.map { c =>
+        val run = new FutureTask[Seq[(Int, Try[String])]](() => Try(c.build(cached, fyod)).fold(
+          e => Seq(c.places.head -> Failure(e)),
+          outputs => c.places.zip(outputs.map(o => Try { o.writeInto(outDir); o.fileName }))))
+        val thread = new Thread(run, s"catalog-build-${c.name}")
+        thread.setDaemon(true)
+        thread.start()
+        thread -> run
       }
-      val zipName = "JO by Type, Ind and Occ for BC and Regions (long).zip"
-      Archive.writeCsvZip(joLongDump(cached), new java.io.File(outDir, zipName),
-        "JO by Type, Ind and Occ for BC and Regions (long).csv")
-      written :+ zipName
+      runs.foreach(_._1.join())
+      // a fatal error escapes Try and is rethrown unwrapped; otherwise, in
+      // the fixed order, the earliest failed artifact's `get` throws
+      runs.flatMap { case (_, run) =>
+        try run.get() catch { case e: ExecutionException => throw e.getCause }
+      }.sortBy(_._1).map(_._2.get)
     } finally cached.jobOpenings.unpersist()
   }
 }

@@ -181,7 +181,7 @@ class PipelinesSpec extends SparkSpec {
   test("data-plane parquet mirrors: one table per artifact, region-partitioned") {
     val out = java.nio.file.Files.createTempDirectory("lmo_dp").toFile
     val written = Pipelines.writeDataPlane(in, fyod, out)
-    assert(written.size === 9)
+    assert(written === catalogNames.init.map(_.stripSuffix(".xlsx")))
     val hoo = new java.io.File(out, "High Opportunity Occupations BC and Regions")
     assert(hoo.exists)
     // region-keyed tables are partitioned by Geographic Area
@@ -192,10 +192,30 @@ class PipelinesSpec extends SparkSpec {
     assert(back.count() > 0)
   }
 
+  /** `buildAll`'s file names, in the order it returns them. */
+  private val catalogNames = Seq(
+    "Employment by Industry and Occupation for BC.xlsx",
+    "Employment by Industry for BC and Regions.xlsx",
+    "Job Openings by Industry and Occupation for BC.xlsx",
+    "High Opportunity Occupations BC and Regions.xlsx",
+    "JO by Type, Ind and Occ for BC and Regions.xlsx",
+    "Employment by Ind and Occ for BC and Regions.xlsx",
+    "Employment by Occupation for BC and Regions.xlsx",
+    "Job Openings by Type and Occ for BC and Regions.xlsx",
+    "Job Openings by NOC and Skill Cluster.xlsx",
+    "JO by Type, Ind and Occ for BC and Regions (long).zip")
+
+  private def bytes(dir: java.io.File, name: String): Seq[Byte] =
+    java.nio.file.Files.readAllBytes(new java.io.File(dir, name).toPath).toSeq
+
   test("artifact 9 + buildAll: ten artifacts on disk, zip contains the csv") {
     val out = java.nio.file.Files.createTempDirectory("lmo_out").toFile
     val written = Pipelines.buildAll(in, fyod, out)
-    assert(written.size === 10)
+    assert(written === catalogNames)
+    // the chains run concurrently, yet a second build writes the same bytes
+    val again = java.nio.file.Files.createTempDirectory("lmo_out_again").toFile
+    assert(Pipelines.buildAll(in, fyod, again) === catalogNames)
+    catalogNames.foreach(f => assert(bytes(again, f) === bytes(out, f), s"$f differs"))
     written.foreach(f => assert(new java.io.File(out, f).length() > 0, s"$f empty"))
     val zf = new java.util.zip.ZipFile(new java.io.File(out,
       "JO by Type, Ind and Occ for BC and Regions (long).zip"))
@@ -284,5 +304,50 @@ class PipelinesSpec extends SparkSpec {
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
       s"left persisted: ${(sc.getPersistentRDDs.keySet -- before).map(sc.getPersistentRDDs)}")
     assert(out.list().toSeq.sorted === written.sorted)
+  }
+
+  /** `buildAll` of `in2` into a fresh directory, which must throw; the
+    * exception and the directory afterwards.
+    */
+  private def failedBuild(in2: Pipelines.LmoInputs): (Throwable, java.io.File) = {
+    val out = java.nio.file.Files.createTempDirectory("lmo_failed").toFile
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    val before = sc.getPersistentRDDs.keySet
+    val e = intercept[Throwable](Pipelines.buildAll(in2, fyod, out))
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty, "left persisted")
+    val buildThreads = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName.startsWith("catalog-build-"))
+    assert(buildThreads.isEmpty, s"still alive: ${buildThreads.map(_.getName)}")
+    (e, out)
+  }
+
+  /** An extra HOO column for a region the job openings do not have:
+    * HOO's roster check fails after its regional openings are pulled.
+    */
+  private lazy val hooMismatch =
+    in.copy(occChar = in.occChar.withColumn("Occ Group: HOO Atlantis 2024E", lit("HOO")))
+  private val hooFile = "High Opportunity Occupations BC and Regions.xlsx"
+
+  test("buildAll: a failed chain rethrows its own exception after every other artifact is written") {
+    val (e, out) = failedBuild(hooMismatch)
+    assert(e.isInstanceOf[IllegalArgumentException], e)
+    assert(e.getMessage.startsWith("requirement failed: HOO columns ↔ region roster mismatch"))
+    // every other chain ran to the end: its artifacts are whole, and no
+    // temp file, CSV dir or partial workbook is left
+    assert(out.list().toSeq.sorted === catalogNames.filterNot(_ == hooFile).sorted)
+    val good = java.nio.file.Files.createTempDirectory("lmo_good").toFile
+    Pipelines.buildAll(in, fyod, good)
+    catalogNames.filterNot(_ == hooFile).foreach(f =>
+      assert(bytes(out, f) === bytes(good, f), s"$f differs"))
+  }
+
+  test("buildAll: of several failed chains, the earliest artifact's failure is rethrown") {
+    // artifact 10 fails at analysis, long before HOO's roster check;
+    // HOO comes first in the fixed order
+    val (e, out) = failedBuild(hooMismatch.copy(clusters = in.clusters.drop("new_cluster")))
+    assert(e.isInstanceOf[IllegalArgumentException], e)
+    assert(out.list().toSeq.sorted ===
+      catalogNames.filterNot(Set(hooFile, "Job Openings by NOC and Skill Cluster.xlsx")).sorted)
   }
 }
